@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: times every SparkEntry query (action = count) on
   * SPARK_GRAFT_SF_DIR. stdout carries EXACTLY ONE compact JSON line
@@ -25,11 +24,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = GraftSession.tune(SparkSession.builder().master(s"local[$cpus]"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
 
     // fixed calibration probe: same scan+sum every time, ~0.1 s at sf0.1
     def probe(): Double = {

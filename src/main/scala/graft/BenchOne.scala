@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, max, struct, xxhash64}
 
 /** Time a subset of SparkEntry queries at an arbitrary sf (ad-hoc).
@@ -11,8 +10,7 @@ import org.apache.spark.sql.functions.{col, max, struct, xxhash64}
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.tune(SparkSession.builder().master("local[32]")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
     spark.read.parquet(s"$sfDir/region.parquet").count()
     for (name <- args; fn <- SparkEntry.queries.get(name)) {
       // same prewarm + per-gate exec-conf discipline as Bench: one-time

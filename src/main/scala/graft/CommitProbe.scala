@@ -1,24 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.graftbridge.Bridge
 
-/** r21 optimization instrument (not part of the driver contract): times
-  * each GraftTable commit primitive — the shared machinery under the t/mv
-  * families and the table-backed st gates — with per-phase wall and Spark
-  * job counts, over `SPARK_GRAFT_PROBE_REPS` warm reps (default 3, first
-  * rep reported separately as cold). The phase split tells which primitive
-  * carries the per-commit fixed cost the hot gates pay 3-10× each.
+/** Commit-primitive probe (a diagnostic main; Verify and Bench never run
+  * it): times each GraftTable commit primitive and the two changelog
+  * consumers (`IncrementalAggView.refresh`, `TableReplicator.sync`) — the
+  * shared machinery under the t/mv families and the table-backed st gates
+  * — with per-phase wall, Spark job and task counts, over
+  * `SPARK_GRAFT_PROBE_REPS` reps (default 3; rep 1 runs cold). The phase
+  * split tells which primitive carries the per-commit fixed cost the hot
+  * gates pay 3-10× each. Runs on `local[SPARK_GRAFT_CPUS]` (default: the
+  * core count), like Bench.
   */
 object CommitProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.tune(SparkSession.builder().master("local[32]")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
     spark.read.parquet(s"$sfDir/region.parquet").count()
 
     @volatile var jobs = 0
+    @volatile var tasks = 0
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         jobs += 1
@@ -28,15 +31,17 @@ object CommitProbe {
         }
         ()
       }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = ()
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = tasks += 1
     })
     def phase[A](rep: Int, name: String)(body: => A): A = {
-      val j0 = jobs
+      Bridge.drainListenerBus(spark)
+      val (j0, k0) = (jobs, tasks)
       val t0 = System.nanoTime()
       val r = body
-      // listener bus is async; a short drain keeps job counts attributable
-      Thread.sleep(80)
-      println(f"[commitprobe] rep$rep $name%-22s ${(System.nanoTime() - t0) / 1e9}%7.3f s  jobs=${jobs - j0}")
+      val sec = (System.nanoTime() - t0) / 1e9
+      // the bus is async: deliver the phase's events before counting them
+      Bridge.drainListenerBus(spark)
+      println(f"[commitprobe] rep$rep $name%-22s $sec%7.3f s  jobs=${jobs - j0}  tasks=${tasks - k0}")
       r
     }
 
@@ -78,7 +83,7 @@ object CommitProbe {
     orders.count() // warm the source plan
 
     for (rep <- 1 to reps) {
-      import graft.tables.{GraftTable, IncrementalAggView}
+      import graft.tables.{GraftTable, IncrementalAggView, TableReplicator}
       def tmp(p: String): String = TempDirs.create(p).toString + "/t"
       val t0all = System.nanoTime()
       val base = phase(rep, "createAs(3000)") {
@@ -87,6 +92,10 @@ object CommitProbe {
       val view = phase(rep, "mvCreate") {
         IncrementalAggView.create(spark, tmp("graft_probe_v"), base,
           Seq("o_orderstatus"), Seq("o_totalprice"))
+      }
+      val replica = tmp("graft_probe_r")
+      phase(rep, "replicaCreate") {
+        TableReplicator.create(spark, replica, base, Seq("o_orderkey"))
       }
       phase(rep, "append(500)") {
         base.append(orders.limit(500)
@@ -100,6 +109,8 @@ object CommitProbe {
           .withColumn("o_totalprice", lit(1111.5)), Seq("o_orderkey"))
       }
       phase(rep, "refresh(upsert)") { view.refresh() }
+      // one sync over the three source commits above
+      phase(rep, "sync(3 commits)") { TableReplicator.sync(spark, replica) }
       phase(rep, "finalRead") { view.toDF().collect() }
       println(f"[commitprobe] rep$rep TOTAL ${(System.nanoTime() - t0all) / 1e9}%7.3f s")
     }

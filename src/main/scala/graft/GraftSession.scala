@@ -4,9 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Tuned SparkSession factory for the graft engine.
   *
-  * Settings chosen for the driver's local[32] harness but expressed so the
-  * same code scales to a multi-executor cluster: AQE owns runtime shuffle
-  * sizing (coalescing + skew splitting), broadcast threshold covers the
+  * One set of settings for every session graft builds (tests, Verify,
+  * Bench, the probes), whatever its master — `local[n]` with n from
+  * `SPARK_GRAFT_CPUS` or the box's core count, or a multi-executor
+  * cluster: AQE owns runtime shuffle sizing (coalescing + skew
+  * splitting, cached frames included), broadcast threshold covers the
   * dimension tables, and parquet pushdown/pruning stay on.
   */
 object GraftSession {
@@ -54,6 +56,14 @@ object GraftSession {
     .config("spark.sql.parquet.fieldId.write.enabled", "true")
     .config("spark.sql.files.maxPartitionBytes", (128L << 20).toString)
     .config("spark.sql.shuffle.partitions", "32")
+    // Let AQE coalesce the final shuffle of a CACHED plan too. Spark keeps
+    // a cached frame's output partitioning fixed by default, so every
+    // `.cache()`d changelog delta, view `next` frame and sync changelog
+    // kept all 32 shuffle partitions — 32-task stages over a few KB, paid
+    // again by every job that reads the cache. Coalescing is sized by
+    // AQE from the bytes actually shuffled, so large caches keep their
+    // parallelism.
+    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     // AQE stringifies the plan on every update; at 10^2+ scan branches an
     // unbounded plan string is a driver OOM. 4M chars bounds the DEBUG
     // artifact without touching planning itself.
@@ -109,6 +119,17 @@ object GraftSession {
         case (k, None)    => spark.conf.unset(k)
       }
     }
+
+  /** A tuned `local[n]` session for the benchmark and probe mains, with n
+    * from `SPARK_GRAFT_CPUS` (default: this machine's core count).
+    */
+  def harness(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
+    val s = tune(SparkSession.builder().master(s"local[$cpus]")).getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   /** Standalone session (tests, ad-hoc mains). */
   def local(threads: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd}
 
 /** TEMPORARY profiling probe for the r20 optimization round (not part of
@@ -12,8 +11,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.tune(SparkSession.builder().master("local[32]")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
     spark.read.parquet(s"$sfDir/region.parquet").count()
 
     @volatile var jobs = 0
@@ -101,8 +99,8 @@ object Prof {
           hashed.head()
           ()
         }
-        // listener bus is async; give it a moment to drain
-        Thread.sleep(150)
+        // listener bus is async: deliver every job event before reading
+        org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
         val wall = (System.nanoTime() - t0) / 1e9
         println(f"[prof] $name rep$rep wall=$wall%.3f jobs=$jobs jobSec=${jobNanos / 1e9}%.3f driverGap=${wall - jobNanos / 1e9}%.3f")
         if (rep == reps) {

@@ -655,12 +655,14 @@ object TableOpsExt {
   // ---------------------------------------------------------------- t37
 
   /** t37: changelog-driven table REPLICATION (r6) — the consumer end of
-    * CDC ([[graft.tables.TableReplicator]]): per-commit replay of the
-    * source's row-level changelog through one mergeBatch each, cursor
-    * riding every apply commit (exactly-once). The gate drives the source
-    * through append / copy-on-write delete / merge-on-read upsert, syncs,
-    * and emits the REPLICA's aggregate plus the applied-commit count —
-    * DuckDB replays the same sequence relationally.
+    * CDC ([[graft.tables.TableReplicator]]): one sync folds the source's
+    * row-level changelog since the cursor to its net change per key and
+    * applies it as ONE mergeBatch, the head cursor riding that commit
+    * (exactly-once per sync). The gate drives the source through append /
+    * copy-on-write delete / merge-on-read upsert, syncs once, and emits
+    * the REPLICA's aggregate plus the applied-commit count (the source
+    * commits the sync covered) — DuckDB replays the same sequence
+    * relationally.
     */
   def t37Replicate(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
@@ -950,8 +952,8 @@ object TableOpsExt {
     * widening, and dropping a column MID-STREAM: `sync` detects the
     * schema-id change, replays the diff (keyed by physical name — the
     * field-id role) onto the replica as one metadata commit carrying the
-    * schema cursor and the remapped key columns, then replays the row
-    * commits under the new schema. DuckDB replays the same sequence
+    * schema cursor and the remapped key columns, then applies the row
+    * commits' net change under the new schema. DuckDB replays the same sequence
     * relationally; the replica's column set is part of the gate.
     */
   def t43CdcSchemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{ColumnStat, Filter, LogicalP
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.FilterEstimation
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+import org.apache.spark.sql.types.TimestampNTZType
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Table-metadata statistics served to Catalyst as NATIVE relation stats —
@@ -97,9 +98,11 @@ object DeclaredStats {
         // a selective filter on a big table broadcasts where the
         // unfiltered table wouldn't. Non-estimable predicates (or CBO
         // off) keep the stats as a sound upper bound, exactly Spark's
-        // size-only behavior.
+        // size-only behavior. FilterEstimation has no case for
+        // timestamp_ntz (it throws MatchError on such a comparison), so a
+        // condition touching one is not estimated at all.
         val rescaled =
-          if (!conf.cboEnabled) None
+          if (!conf.cboEnabled || cond.references.exists(_.dataType == TimestampNTZType)) None
           else FilterEstimation(f).estimate
         rescaled match {
           case Some(est) =>

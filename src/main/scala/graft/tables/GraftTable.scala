@@ -910,10 +910,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
         // Copy-on-write commits don't retain row-level lineage, but they
         // only rewrite TOUCHED files — so the row-level diff is
         // recoverable by comparing just the removed file set against the
-        // added one (multiset exceptAll both ways; rows a rewrite copied
-        // unchanged cancel out). CoW mutations materialize pending MOR
-        // deletes first (ensureMaterialized), so the physical diff IS the
-        // logical diff. Cost is O(rewritten files), not O(table).
+        // added one (a multiset diff; rows a rewrite copied unchanged
+        // cancel out). Cost is O(rewritten files), not O(table).
         case "delete" | "update" | "merge" | "overwrite" | "truncate" | "rollback" =>
           val parentPaths = parentMd.files.map(_.path).toSet
           val curPaths = md.files.map(_.path).toSet
@@ -925,15 +923,15 @@ class GraftTable(val spark: SparkSession, val location: String) {
           // first (overwrite/truncate no longer pay a thrown-away rewrite;
           // rollback targets keep their delete files live). CoW mutations
           // still materialize before operating, so for them the delete set
-          // is empty and this degrades to a plain scan.
+          // is empty and this degrades to a plain scan. A side with no
+          // files diffs against nothing: the other side IS the changelog,
+          // read without a shuffle (whole-file deletes, truncate, an
+          // overwrite of an empty table).
           def readSide(fs: Seq[DataFile], side: ManifestData): DataFrame =
-            if (fs.isEmpty)
-              spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
-            else readWithMor(m, side.copy(files = fs), None)
-          val before = readSide(removed, parentMd)
-          val after = readSide(added, md)
-          tagged(before.exceptAll(after), "delete")
-            .unionAll(tagged(after.exceptAll(before), "insert"))
+            readWithMor(m, side.copy(files = fs), None)
+          if (added.isEmpty) tagged(readSide(removed, parentMd), "delete")
+          else if (removed.isEmpty) tagged(readSide(added, md), "insert")
+          else GraftTable.netDiff(readSide(removed, parentMd), readSide(added, md))
         case other => throw new UnsupportedOperationException(
           s"changelog across '$other' commit (snapshot ${s.id}): no row-level " +
             "lineage recovery for this operation")
@@ -942,7 +940,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
   }
 
   /** Row-level diff between ANY two retained snapshots, ancestry or not:
-    * multiset exceptAll over the file sets that differ (shared files
+    * multiset diff over the file sets that differ (shared files
     * cancel without being read). This is the reconciliation read a
     * changelog consumer needs after a rollback moved the head off its
     * last-delivered branch — `changesBetween` is cheaper when `from` IS
@@ -954,8 +952,6 @@ class GraftTable(val spark: SparkSession, val location: String) {
       .getOrElse(throw new IllegalArgumentException(s"no snapshot $id (expired?)"))
     val fromMd = md(fromSnapshotId)
     val toMd = md(toSnapshotId)
-    def tagged(df: DataFrame, kind: String): DataFrame =
-      df.select(m.schema.fieldNames.map(col) :+ lit(kind).as("_change_type"): _*)
     val fromPaths = fromMd.files.map(_.path).toSet
     val toPaths = toMd.files.map(_.path).toSet
     def readOrEmpty(fs: Seq[DataFile]): DataFrame =
@@ -976,8 +972,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
           readOrEmpty(toMd.files.filterNot(f => fromPaths.contains(f.path))))
       else
         (readWithMor(m, fromMd, None), readWithMor(m, toMd, None))
-    tagged(before.exceptAll(after), "delete")
-      .unionAll(tagged(after.exceptAll(before), "insert"))
+    GraftTable.netDiff(before, after)
   }
 
   def asOfTimestamp(timestampMs: Long): DataFrame = {
@@ -3206,6 +3201,29 @@ class GraftTable(val spark: SparkSession, val location: String) {
 }
 
 object GraftTable {
+
+  /** The row-level multiset diff `before` → `after` as a changelog frame
+    * (the columns of `before`, then `_change_type`), in ONE aggregate:
+    * rows of `before` count −1 and rows of `after` +1, grouped by every
+    * column, and a group's net n emits |n| copies typed 'insert' (n > 0)
+    * or 'delete' (n < 0). That is `before.exceptAll(after)` tagged
+    * 'delete' plus `after.exceptAll(before)` tagged 'insert' — the same
+    * grouping semantics (NULLs group together; NaN and −0.0 normalize
+    * like any Spark grouping) — but reading each side once and shuffling
+    * once, where the two `exceptAll`s read and shuffle both sides twice.
+    */
+  private[tables] def netDiff(before: DataFrame, after: DataFrame): DataFrame = {
+    val cols = before.columns.toSeq.map(c => col("`" + c.replace("`", "``") + "`"))
+    val n = "__graft_net"
+    before.select(cols :+ lit(-1L).as(n): _*)
+      .unionAll(after.select(cols :+ lit(1L).as(n): _*))
+      .groupBy(cols: _*).agg(sum(col(n)).as(n))
+      .filter(col(n) =!= 0L)
+      .select(cols ++ Seq(
+        when(col(n) > 0L, lit("insert")).otherwise(lit("delete")).as("_change_type"),
+        explode(sequence(lit(1L), abs(col(n)))).as(n)): _*)
+      .drop(n)
+  }
 
   /** Footer-stat bounds (the FooterStats normalized domain: longs for
     * integrals/date-days/timestamp-micros, doubles, booleans) converted

@@ -1,6 +1,7 @@
 package graft.tables
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Changelog-driven table replication: keep a replica GraftTable in sync
@@ -8,21 +9,28 @@ import org.apache.spark.sql.functions._
   * consumer side of CDC (the reference's stack pairs Iceberg CDC reads
   * with a downstream writer; here both ends are native).
   *
-  * `sync` walks the source's snapshot chain from the replica's cursor and
-  * applies each commit as ONE [[GraftTable.mergeBatch]]: the commit's
-  * 'insert' rows upsert, its 'delete' rows become equality-delete keys,
-  * and the cursor property advances in the same metadata version — a
-  * crash replays from the last applied commit, never double-applies
-  * (exactly-once per commit). Applying commit-by-commit preserves
-  * ordering: a key updated in one commit and deleted two commits later
-  * converges to deleted, which a range-collapsed diff could not guarantee
-  * without a per-row ordinal.
+  * `sync` reads the source's changelog from the replica's cursor to the
+  * head ([[GraftTable.changelogView]], each row tagged with its commit's
+  * `_change_ordinal`) and folds it to the NET change — Iceberg's
+  * `net_changes`: for every key, only the rows of the last commit that
+  * touched it. Those rows go to the replica as ONE
+  * [[GraftTable.mergeBatch]]: 'insert' rows upsert, 'delete' rows become
+  * equality-delete keys, and the head cursor advances in the same
+  * metadata version — a crash replays the whole range, never
+  * double-applies (exactly-once per sync). The fold is exact, not an
+  * approximation of commit-by-commit replay: each replayed commit drops
+  * a touched key's old rows before adding its own, so after replay a key
+  * holds exactly its last toucher's inserts — a key updated in one commit
+  * and deleted two commits later converges to deleted, one deleted and
+  * re-inserted converges to the re-insert.
   *
-  * Cost per synced commit is O(commit's changed rows) — appends replay as
-  * manifest diffs, merge-on-read upserts as their delete keys + new files;
-  * the replica is never rescanned. Row-preserving maintenance commits
-  * (compaction, clustering, delete materialization) produce an empty
-  * changelog and advance the cursor with a metadata-only commit.
+  * Cost per sync is O(changed rows in the range) in a constant number of
+  * Spark jobs and ONE replica commit, however many source commits it
+  * covers — appends read as manifest diffs, merge-on-read upserts as
+  * their delete keys + new files; the replica is never rescanned.
+  * Row-preserving maintenance commits (compaction, clustering, delete
+  * materialization) produce an empty changelog; a range of only those
+  * advances the cursor with a metadata-only commit.
   *
   * SCHEMA EVOLUTION propagates: before reading anything, `sync` compares
   * the source's current schema id against the one it last applied
@@ -42,7 +50,7 @@ import org.apache.spark.sql.functions._
   * gone and `sync` self-heals: it replaces the replica with the source's
   * current state in one overwrite commit carrying the cursor (idempotent,
   * at-least-once safe) and returns [[TableReplicator.FullResync]] (-1) so
-  * callers can tell a full reconciliation from a per-commit replay.
+  * callers can tell a full reconciliation from a changelog replay.
   */
 object TableReplicator {
   private[tables] val SrcLocProp = "graft.replica.source-location"
@@ -54,7 +62,7 @@ object TableReplicator {
 
   /** `sync` return value for the self-heal path: the replica was rebuilt
     * from the source's current state (rollback past the cursor, or cursor
-    * snapshot expired), not replayed per commit.
+    * snapshot expired), not replayed from the changelog.
     */
   val FullResync: Int = -1
 
@@ -158,7 +166,7 @@ object TableReplicator {
   }
 
   /** Apply all source commits since the replica's cursor. Returns the
-    * number of commits applied (0 = already in sync), or
+    * number of source commits applied (0 = already in sync), or
     * [[FullResync]] (-1) when the cursor was unreachable and the replica
     * was rebuilt from the source's current state instead.
     */
@@ -198,12 +206,12 @@ object TableReplicator {
     // a ref-following replica syncs to the BRANCH head; when the ref is
     // gone (dropped after publish) it falls back to main — the staged
     // commits it already applied are in main's ancestry after the
-    // fast-forward, so the per-commit walk continues seamlessly
+    // fast-forward, so the changelog walk continues seamlessly
     val head = props.get(SrcRefProp).flatMap(sm.refs.get).map(_.snapshotId)
       .orElse(sm.currentSnapshotId)
       .getOrElse(throw new IllegalStateException("source table has no snapshot"))
 
-    // schema first: changesBetween (and the resync read) emit the source's
+    // schema first: changelogView (and the resync read) emit the source's
     // CURRENT schema, so the replica must match before any row lands.
     // Pre-evolution replicas carry no schema cursor — derive it from the
     // cursor snapshot's stamped schema id.
@@ -265,43 +273,51 @@ object TableReplicator {
       return FullResync
     }
 
-    chain.foreach { snap =>
-      val parent = snap.parentId.getOrElse(
-        throw new IllegalStateException(s"commit ${snap.id} has no parent"))
-      val cursor = Map(SrcSnapProp -> snap.id.toString)
-      // Emptiness is decided from COMMIT METADATA where provable, so the
-      // common cases skip the per-commit isEmpty probe job (guide §1.2):
-      //   - 'replace'/'rewrite-deletes' contribute an EMPTY changelog by
-      //     construction (commitChanges returns an empty frame without
-      //     reading anything) — advance the cursor metadata-only;
-      //   - a file-record total that MOVED vs the parent proves the
-      //     changelog NONEMPTY for every other op (appends add records,
-      //     CoW mutations change the removed-vs-added multiset cardinality,
-      //     MOR upserts add their new files' records) — merge directly.
-      // An unchanged total on a data op stays ambiguous (pure equality
-      // delete, equal-count CoW update) and pays the probe as before.
-      if (snap.operation == "replace" || snap.operation == "rewrite-deletes") {
-        replica.setProperties(cursor)
-      } else {
-        val parentTotal = sm.snapshot(parent).map(_.totalRecords).getOrElse(0L)
-        val ch = source.changesBetween(parent, snap.id).cache()
-        try {
-          if (snap.totalRecords == parentTotal && ch.isEmpty) {
-            // no rows changed: nothing to apply, advance cursor
-            replica.setProperties(cursor)
-          } else {
-            val inserts = ch.filter(col("_change_type") === "insert")
-              .drop("_change_type")
-            val deletedKeys = ch.filter(col("_change_type") === "delete")
-              .select(keyCols.map(col): _*)
-            replica.mergeBatch(inserts, Some(deletedKeys), keyCols,
-              extraProperties = cursor)
-          }
-        } finally {
-          ch.unpersist()
-          ()
-        }
+    // ONE replica commit for the whole chain, carrying the head cursor.
+    // Per-commit replay leaves each touched key holding exactly the rows
+    // of the LAST commit that touched it (every commit's merge drops the
+    // key's old rows before adding its own inserts), so the chain folds
+    // to the net change Iceberg's changelog view calls `net_changes`:
+    // per key, keep the rows of the highest `_change_ordinal` — its
+    // inserts upsert, its deletes become equality-delete keys.
+    val cursor = Map(SrcSnapProp -> head.toString)
+    val rowPreserving = Set("replace", "rewrite-deletes")
+    val dataCommits = chain.filterNot(s => rowPreserving.contains(s.operation))
+    // 'replace'/'rewrite-deletes' contribute an EMPTY changelog by
+    // construction, so a maintenance-only chain just advances the cursor.
+    if (dataCommits.isEmpty) {
+      replica.setProperties(cursor)
+      return chain.size
+    }
+    val lastTouch = max(col("_change_ordinal"))
+      .over(Window.partitionBy(keyCols.map(col): _*))
+    val net = source.changelogView(last, head)
+      .withColumn("__last_touch", lastTouch)
+      .filter(col("_change_ordinal") === col("__last_touch"))
+      .drop("__last_touch", "_change_ordinal", "_commit_snapshot_id")
+      .cache()
+    try {
+      // Emptiness is decided from COMMIT METADATA where provable: a
+      // file-record total that MOVED vs the parent proves that commit's
+      // changelog nonempty (appends add records, CoW mutations change the
+      // removed-vs-added cardinality, MOR upserts add their new files'
+      // records). Only a chain of unchanged totals (pure equality
+      // deletes, equal-count CoW updates) pays the one isEmpty probe.
+      val provablyNonEmpty = dataCommits.exists { s =>
+        s.totalRecords != s.parentId.flatMap(sm.snapshot).map(_.totalRecords).getOrElse(0L)
       }
+      if (!provablyNonEmpty && net.isEmpty) replica.setProperties(cursor)
+      else {
+        val inserts = net.filter(col("_change_type") === "insert")
+          .drop("_change_type")
+        val deletedKeys = net.filter(col("_change_type") === "delete")
+          .select(keyCols.map(col): _*)
+        replica.mergeBatch(inserts, Some(deletedKeys), keyCols,
+          extraProperties = cursor)
+      }
+    } finally {
+      net.unpersist()
+      ()
     }
     chain.size
   }

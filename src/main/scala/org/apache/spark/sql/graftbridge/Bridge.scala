@@ -21,4 +21,11 @@ object Bridge {
   /** A DataFrame over an arbitrary (resolved) logical plan. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSession], plan)
+
+  /** Block until every listener event posted so far has been delivered
+    * (the bus is `private[spark]` and asynchronous), so job and task
+    * counts read right after an action are complete. Times out after 60 s.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
 }

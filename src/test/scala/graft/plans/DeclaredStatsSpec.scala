@@ -117,6 +117,32 @@ class DeclaredStatsSpec extends SparkSpec {
     assert(t.toDF().filter($"id" < 2500).count() == 2500)
   }
 
+  test("filters on a timestamp_ntz column plan under CBO: SQL WHERE and DataFrame") {
+    import graft.sources.GraftSql
+    // FilterEstimation has no timestamp_ntz case (MatchError under CBO);
+    // such a filter must plan with the stats kept as the sound upper bound
+    val loc = tmp()
+    val t = GraftTable.createAs(spark, loc, spark.range(100).select($"id",
+      (lit("2024-01-01 00:00:00").cast("timestamp_ntz") +
+        expr("make_interval(0, 0, 0, 0, CAST(id AS INT), 0, 0)")).as("ts")))
+    val g = new GraftSql(spark, Files.createTempDirectory("graft_ntz").toString)
+    g.register("ev", loc)
+    val lo = "TIMESTAMP_NTZ '2024-01-01 10:00:00'"
+    val hi = "TIMESTAMP_NTZ '2024-01-01 19:00:00'"
+    def checkBoth(): Unit = {
+      assert(g.sql(s"SELECT COUNT(*) AS n FROM ev WHERE ts BETWEEN $lo AND $hi")
+        .head().getLong(0) == 10)
+      val filtered = GraftTable.load(spark, loc).toDF()
+        .filter($"ts" >= expr(lo) && $"ts" <= expr(hi))
+      assert(filtered.count() == 10)
+      assert(filtered.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(100)),
+        "an unestimated filter keeps the declared row count as its bound")
+    }
+    checkBoth() // footer min/max only
+    t.analyze(Seq("id", "ts"))
+    checkBoth() // with persisted NDV too
+  }
+
   test("CBO join reorder is observable on a 3-table facade query") {
     import graft.sources.GraftSql
     // fact(10k rows), mid(2k rows), tiny(10 rows) — but only 2 of the 10

@@ -6,8 +6,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** Changelog-driven replication (t37): per-commit replay through
-  * mergeBatch keeps a replica row-identical to the source, exactly-once.
+/** Changelog-driven replication (t37): each sync's net change, applied
+  * through one mergeBatch, keeps a replica row-identical to the source,
+  * exactly-once.
   */
 class ReplicatorSpec extends SparkSpec {
   import spark.implicits._
