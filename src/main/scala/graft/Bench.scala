@@ -91,6 +91,8 @@ object Bench {
     def familyOf(n: String): String = n.takeWhile(!_.isDigit)
     var prevFamily: String = null
     val best = Array.fill(named.size)(Double.MaxValue)
+    // generated classes the best rep compiled (its layer-split row)
+    val compiled = Array.fill(named.size)(Compiles(0L, 0.0))
     // A query that throws must surface as an explicit error, not as the
     // elapsed-until-throw time masquerading as a (suspiciously fast) success.
     val errs = Array.fill[Option[String]](named.size)(None)
@@ -112,6 +114,7 @@ object Bench {
       val gateConfs = SparkEntry.executionConfs.getOrElse(name, Map.empty)
       GraftSession.withExecConfs(spark, gateConfs) {
       val t0 = System.nanoTime()
+      val c0 = Compiles.now()
       try {
         // Hash EVERY output value, not count rows: a bare count() (and
         // even count(col) — non-nullable columns normalize to count(1))
@@ -134,7 +137,8 @@ object Bench {
         val out = fn(spark, sfDir)
         out.select(xxhash64(struct(out.columns.map(col): _*)).as("h"))
           .agg(max(org.apache.spark.sql.functions.col("h"))).head()
-        best(i) = math.min(best(i), (System.nanoTime() - t0) / 1e9)
+        val sec = (System.nanoTime() - t0) / 1e9
+        if (sec < best(i)) { best(i) = sec; compiled(i) = Compiles.now() - c0 }
       } catch { case e: Throwable =>
         errs(i) = Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")
       }
@@ -193,8 +197,14 @@ object Bench {
       if (prewarm.isEmpty) ""
       else prewarm.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString(",\"prewarm\":{", ",", "}")
+    // per-gate layer split: Janino compiles and their ms in the best rep
+    val layersJson = named.zipWithIndex.collect {
+      case ((name, _), i) if errs(i).isEmpty =>
+        "\"" + name + "\":{\"compiles\":" + compiled(i).count +
+          ",\"compileMs\":" + fmt(compiled(i).ms) + "}"
+    }.sorted.mkString(",\"layers\":{", ",", "}")
     val json =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$errsJson$prewarmJson,$calJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$errsJson$prewarmJson$layersJson,$calJson,"sf":"$sfDir"}"""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_raw.json")
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

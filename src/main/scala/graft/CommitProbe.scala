@@ -8,7 +8,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   * it): times each GraftTable commit primitive and the two changelog
   * consumers (`IncrementalAggView.refresh`, `TableReplicator.sync`) — the
   * shared machinery under the t/mv families and the table-backed st gates
-  * — with per-phase wall, Spark job and task counts, over
+  * — with per-phase wall, Spark job and task counts and the generated
+  * classes each phase compiled ([[Compiles]]), over
   * `SPARK_GRAFT_PROBE_REPS` reps (default 3; rep 1 runs cold). The phase
   * split tells which primitive carries the per-commit fixed cost the hot
   * gates pay 3-10× each. Runs on `local[SPARK_GRAFT_CPUS]` (default: the
@@ -37,11 +38,12 @@ object CommitProbe {
       Bridge.drainListenerBus(spark)
       val (j0, k0) = (jobs, tasks)
       val t0 = System.nanoTime()
-      val r = body
+      val (r, c) = Compiles.during(body)
       val sec = (System.nanoTime() - t0) / 1e9
       // the bus is async: deliver the phase's events before counting them
       Bridge.drainListenerBus(spark)
-      println(f"[commitprobe] rep$rep $name%-22s $sec%7.3f s  jobs=${jobs - j0}  tasks=${tasks - k0}")
+      println(f"[commitprobe] rep$rep $name%-22s $sec%7.3f s  jobs=${jobs - j0}  " +
+        f"tasks=${tasks - k0}  compiles=${c.count}  compileMs=${c.ms}%.0f")
       r
     }
 

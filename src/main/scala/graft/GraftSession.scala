@@ -64,6 +64,21 @@ object GraftSession {
     // AQE from the bytes actually shuffled, so large caches keep their
     // parallelism.
     .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+    // Compile each generated-code shape once per session. graft runs many
+    // small actions whose plans repeat commit after commit, but Spark's
+    // codegen class cache holds 100 classes and names each class after
+    // its stage's position in the plan, so the same stage recompiled
+    // (Janino, ~25 ms a class) wherever it landed and after every
+    // eviction. Measured working sets, with stage ids out of the names
+    // (perfbench, seed 5): 270 distinct classes over a whole lake_write
+    // run (set-up, timed cycle, verification), 175 over a pipeline_batch
+    // run; one commit cycle or gate pass alone uses 145-195. 512 holds
+    // either. The cache keeps each class's compiled code on the heap,
+    // ~20-25 KB a class as measured (retained heap rose 4.2 MB on
+    // lake_write, 1.6 MB on pipeline_batch), so the cap also bounds that
+    // at ~13 MB.
+    .config("spark.sql.codegen.cache.maxEntries", "512")
+    .config("spark.sql.codegen.useIdInClassName", "false")
     // AQE stringifies the plan on every update; at 10^2+ scan branches an
     // unbounded plan string is a driver OOM. 4M chars bounds the DEBUG
     // artifact without touching planning itself.

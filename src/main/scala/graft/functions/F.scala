@@ -154,6 +154,12 @@ object F {
 
   /** Registered domain (mini-PSL rule) of an http/https URL. */
   def regDomain(url: Column): Column = col(UrlRegisteredDomain(ex(url)))
+
+  /** A long constant that generated code reads from the plan's
+    * references instead of inlining ([[BoundLong]]): plans differing only
+    * in it share one compiled class.
+    */
+  def boundLong(v: Long): Column = col(BoundLong(v))
 }
 
 /** SQL-surface registration: `spark.sql("SELECT graft_cosine(a, b) ...")`.

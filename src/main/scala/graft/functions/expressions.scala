@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -1145,4 +1146,26 @@ case class CanonicalPath(child: Expression) extends UnaryExpression {
     })
   override protected def withNewChildInternal(newChild: Expression): CanonicalPath =
     copy(child = newChild)
+}
+
+/** A per-plan long constant that generated code reads from the
+  * `references` array instead of inlining (SnappyData's tokenized
+  * literal). Spark writes a long `Literal` into the Java source, so plans
+  * that differ only in such a value — the changelog's per-commit
+  * `_change_ordinal` and `_commit_snapshot_id` — compile to distinct
+  * classes; this one compiles once per plan shape. Deterministic and NOT
+  * foldable, so the optimizer cannot turn it back into a literal; for the
+  * same reason it is for constants graft adds itself, never for user
+  * predicates, whose literals parquet pushdown and file pruning need.
+  */
+case class BoundLong(value: Long) extends LeafExpression {
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_bound_long"
+  override def eval(input: InternalRow): Any = value
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("boundLong", java.lang.Long.valueOf(value), "java.lang.Long")
+    ev.copy(code = code"final long ${ev.value} = $ref.longValue();", isNull = FalseLiteral)
+  }
 }

@@ -172,27 +172,59 @@ class GraftTable(val spark: SparkSession, val location: String) {
     * name-based read cannot see; graft's own eq-delete writes on such
     * tables stamp the same ids. EVERY eq-key consumer must come through
     * here (read path, changelog, materialization) or renamed foreign
-    * tables diverge between them.
+    * tables diverge between them. The files name their columns `cols`;
+    * the frame names them `as`, `schema`'s names for them.
     */
   private def readEqKeys(cols: Seq[String], files: Seq[String],
-      schema: StructType): DataFrame = {
-    val fields = cols.flatMap(c => schema.fields.find(_.name == c))
+      schema: StructType, as: Seq[String]): DataFrame = {
+    val fields = as.flatMap(c => schema.fields.find(_.name == c))
     val byId = fields.size == cols.size &&
       fields.forall(_.metadata.contains(ColumnMapping.ParquetFieldIdKey))
     if (byId) spark.read.schema(StructType(fields.map(f =>
       StructField(f.name, f.dataType, nullable = true,
         ColumnMapping.fileMetadata(f))).toArray))
       .parquet(files: _*)
-    else Pq.readImmutable(spark, files)
+    else {
+      val keys = Pq.readImmutable(spark, files)
+      val moved = cols.zip(as).filter { case (a, b) => a != b }.toMap
+      if (moved.isEmpty) keys else keys.withColumnsRenamed(moved)
+    }
+  }
+
+  /** `df` joined (`how`) null-safely with the key tuples of equality-delete
+    * `files` on key columns `cols`. `names` maps key names as the delete's
+    * writer saw them to `schema`'s where a later rename moved them
+    * ([[eqNamesAt]]).
+    */
+  private def joinEqKeys(df: DataFrame, cols: Seq[String], files: Seq[String],
+      schema: StructType, how: String,
+      names: Map[String, String] = Map.empty): DataFrame = {
+    val as = cols.map(c => names.getOrElse(c, c))
+    val keys = readEqKeys(cols, files, schema, as)
+    df.join(keys, as.map(c => df(c) <=> keys(c)).reduce(_ && _), how)
   }
 
   private def applyEq(df: DataFrame, eqs: Seq[EqualityDelete],
-      schema: StructType): DataFrame =
+      schema: StructType, names: Map[String, String] = Map.empty): DataFrame =
     eqs.groupBy(_.cols).toSeq.sortBy(_._1.mkString(","))
       .foldLeft(df) { case (d, (cols, es)) =>
-        val keys = readEqKeys(cols, es.flatMap(_.files), schema)
-        d.join(keys, cols.map(c => d(c) <=> keys(c)).reduce(_ && _), "left_anti")
+        joinEqKeys(d, cols, es.flatMap(_.files), schema, "left_anti", names)
       }
+
+  /** Equality deletes name their key columns as their writer saw them.
+    * Non-add evolution is refused while deletes are pending, so every
+    * delete live at snapshot `s` or at its parent was written under `s`'s
+    * schema. This maps those names, through the column's physical name,
+    * to `m.schema`'s names: a changelog read under the current schema
+    * needs it once a key column was renamed after the commit. Only moved
+    * names are listed.
+    */
+  private def eqNamesAt(m: TableMeta, s: Snapshot): Map[String, String] = {
+    val now = m.schema.fields.map(f => ColumnMapping.physicalName(f) -> f.name).toMap
+    m.schemaAt(s.schemaId).fields.flatMap { f =>
+      now.get(ColumnMapping.physicalName(f)).filter(_ != f.name).map(f.name -> _)
+    }.toMap
+  }
 
   /** Can equality delete `e` possibly hit rows of data file `f`? False
     * only when some key column's ranges are PROVABLY disjoint — delete
@@ -204,9 +236,11 @@ class GraftTable(val spark: SparkSession, val location: String) {
     * from an anti-join over every older file into one over the files
     * whose key range it intersects.
     */
-  private def eqMayHit(m: TableMeta, f: DataFile, e: EqualityDelete): Boolean =
+  private def eqMayHit(m: TableMeta, f: DataFile, e: EqualityDelete,
+      names: Map[String, String] = Map.empty): Boolean =
     e.stats.isEmpty || e.cols.forall { c =>
-      (e.stats.get(c), f.stats.get(ColumnMapping.physicalOf(m.schema, c))) match {
+      (e.stats.get(c),
+        f.stats.get(ColumnMapping.physicalOf(m.schema, names.getOrElse(c, c)))) match {
         case (Some(ds), Some(fs)) =>
           (ds.nullCount > 0 && fs.nullCount > 0) ||
             ManifestStats.rangesMayOverlap(ds, fs)
@@ -257,11 +291,12 @@ class GraftTable(val spark: SparkSession, val location: String) {
     */
   private def readWithMor(m: TableMeta, md: ManifestData,
       filterSql: Option[String], ndv: Map[String, Long] = Map.empty,
-      hists: Map[String, ColHistogram] = Map.empty): DataFrame = {
+      hists: Map[String, ColHistogram] = Map.empty,
+      eqNames: Map[String, String] = Map.empty): DataFrame = {
     val pruned = filterSql.map(f => ScanPlanner.pruneFiles(m, md.files, f, spark))
       .getOrElse(md.files)
     val scans = pruned.groupBy(f =>
-        (md.equalityDeletes.filter(e => f.seq < e.seq && eqMayHit(m, f, e)),
+        (md.equalityDeletes.filter(e => f.seq < e.seq && eqMayHit(m, f, e, eqNames)),
           md.positionDeleteFiles.exists(pf => posMayHit(pf, f.path))))
       .toSeq.map { case ((eqs, hasPos), fs) =>
         val pos =
@@ -269,7 +304,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
           else md.positionDeleteFiles.filter(pf => fs.exists(f => posMayHit(pf, f.path)))
         applyEq(applyPosDeletes(
           ScanPlanner.scan(spark, m, fs, filterSql, rowMeta = pos.nonEmpty),
-          fs, pos), eqs, m.schema)
+          fs, pos), eqs, m.schema, eqNames)
       }
     val base =
       if (scans.isEmpty) ScanPlanner.scan(spark, m, Nil, filterSql)
@@ -794,8 +829,10 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val parts = ancestryChain(m, fromSnapshotId, toSnapshotId).zipWithIndex
       .map { case (s, i) =>
         commitChanges(m, s)
-          .withColumn("_change_ordinal", lit(i.toLong))
-          .withColumn("_commit_snapshot_id", lit(s.id))
+          // bound, not literal: a literal long lands in the generated
+          // Java source, so every range would compile its own classes
+          .withColumn("_change_ordinal", graft.functions.F.boundLong(i.toLong))
+          .withColumn("_commit_snapshot_id", graft.functions.F.boundLong(s.id))
       }
     if (parts.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
@@ -864,6 +901,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
   private def commitChanges(m: TableMeta, s: Snapshot): DataFrame = {
     def tagged(df: DataFrame, kind: String): DataFrame =
       df.select(m.schema.fieldNames.map(col) :+ lit(kind).as("_change_type"): _*)
+    val eqNames = eqNamesAt(m, s)
+    def readMor(md: ManifestData): DataFrame = readWithMor(m, md, None, eqNames = eqNames)
     locally {
       val md = manifestDataOf(s)
       val parentMd = s.parentId.flatMap(m.snapshot).map(manifestDataOf)
@@ -876,7 +915,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
         case "delete-mor" =>
           val newPreds = md.deletePredicates.diff(parentMd.deletePredicates)
           val hit = newPreds.map(p => coalesce(expr(p), lit(false))).reduce(_ || _)
-          tagged(readWithMor(m, parentMd, None).filter(hit), "delete")
+          tagged(readMor(parentMd).filter(hit), "delete")
         case "delete-mor-pos" =>
           val newPos = md.positionDeleteFiles.diff(parentMd.positionDeleteFiles)
           val dels = posDeleteRows(newPos)
@@ -887,12 +926,9 @@ class GraftTable(val spark: SparkSession, val location: String) {
             "left_semi").drop(ScanPlanner.RowMetaFile, ScanPlanner.RowMetaPos), "delete")
         case "delete-mor-eq" | "upsert-mor" =>
           val newEq = md.equalityDeletes.diff(parentMd.equalityDeletes)
-          val live = readWithMor(m, parentMd, None)
-          val deletes = newEq.map { e =>
-            val keys = readEqKeys(e.cols, e.files, m.schema)
-            tagged(live.join(keys,
-              e.cols.map(c => live(c) <=> keys(c)).reduce(_ && _), "left_semi"), "delete")
-          }
+          val live = readMor(parentMd)
+          val deletes = newEq.map(e => tagged(joinEqKeys(live, e.cols, e.files,
+            m.schema, "left_semi", eqNames), "delete"))
           val before = parentMd.files.map(_.path).toSet
           val added = md.files.filterNot(f => before.contains(f.path))
           val inserts =
@@ -928,7 +964,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
           // read without a shuffle (whole-file deletes, truncate, an
           // overwrite of an empty table).
           def readSide(fs: Seq[DataFile], side: ManifestData): DataFrame =
-            readWithMor(m, side.copy(files = fs), None)
+            readMor(side.copy(files = fs))
           if (added.isEmpty) tagged(readSide(removed, parentMd), "delete")
           else if (removed.isEmpty) tagged(readSide(added, md), "insert")
           else GraftTable.netDiff(readSide(removed, parentMd), readSide(added, md))
@@ -1918,12 +1954,11 @@ class GraftTable(val spark: SparkSession, val location: String) {
       val applicable = md.files.filter(f => f.seq < e.seq && eqMayHit(m, f, e))
       if (applicable.isEmpty) Nil
       else {
-        val keys = readEqKeys(e.cols, e.files, m.schema)
         // defaults-aware scan (+ row meta per branch): eq keys on a
         // defaulted column must probe the FILLED values, same as the
         // read path
         val base = ScanPlanner.scan(spark, m, applicable, None, rowMeta = true)
-        base.join(keys, e.cols.map(c => base(c) <=> keys(c)).reduce(_ && _), "left_semi")
+        joinEqKeys(base, e.cols, e.files, m.schema, "left_semi")
           .select(col(ScanPlanner.RowMetaFile)).distinct().collect()
           .map(r => stripScheme(r.getString(0))).toSeq
       }

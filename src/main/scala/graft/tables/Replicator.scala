@@ -293,7 +293,11 @@ object TableReplicator {
       .over(Window.partitionBy(keyCols.map(col): _*))
     val net = source.changelogView(last, head)
       .withColumn("__last_touch", lastTouch)
-      .filter(col("_change_ordinal") === col("__last_touch"))
+      // `>=`, not `===`: equal to the key's max, but an attribute
+      // equality lets Spark infer `__last_touch IN (every ordinal of the
+      // range)` as an extra filter, whose generated code grows with the
+      // range length
+      .filter(col("_change_ordinal") >= col("__last_touch"))
       .drop("__last_touch", "_change_ordinal", "_commit_snapshot_id")
       .cache()
     try {

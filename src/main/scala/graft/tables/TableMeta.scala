@@ -1015,7 +1015,10 @@ object MetaIO {
   // location CAN be deleted and re-created within one JVM (test fixtures,
   // bench reps), re-using v1.metadata.json with different content — so the
   // cache key carries the file's (mtime, length) identity on top of
-  // (location, version). One stat call replaces the full read + JSON parse
+  // (location, version), and publishing version 1 (a table created at the
+  // location) drops every entry of the location: a re-created table whose
+  // files match an old entry's mtime and length must not be served the
+  // old table. One stat call replaces the full read + JSON parse
   // on every `.meta` access (r20 profiling: MetaIO.readString on the
   // driver's hot path of every t-family gate). Bounded LRU, same
   // discipline as childCache.
@@ -1038,6 +1041,10 @@ object MetaIO {
       key.foreach(k => metaCache.synchronized { metaCache.put(k, m); () })
       m
     }
+  }
+
+  private def forgetLocation(location: String): Unit = metaCache.synchronized {
+    metaCache.keySet.removeIf(_._1 == location); ()
   }
 
   def loadManifest(conf: Configuration, location: String, snap: Snapshot): Seq[DataFile] =
@@ -1104,6 +1111,7 @@ object MetaIO {
         s"commit conflict at ${m.location}: version ${m.version} was " +
           "committed by another writer")
     faultPoint("cas-published")
+    if (m.version == 1) forgetLocation(m.location)
     writeStringAtomic(conf, versionHintPath(m.location), m.version.toString)
     CommitBus.signal(m.location)
     if (m.properties.get(TableFormat.DeleteAfterCommit).contains("true")) {

@@ -291,6 +291,29 @@ class ChangelogNetSpec extends SparkSpec {
     assert(rep.meta.properties(TableReplicator.KeyColsProp) == "id")
   }
 
+  test("changelog and sync across a key rename after an equality-delete commit") {
+    // the MOR commits' delete files name the key `k`; the range is read
+    // after the key became `id`
+    val c = new Chain(initialRows)
+    val start = c.source.meta.currentSnapshotId.get
+    val perCommit = Seq.newBuilder[String]
+    def step(op: Op): Unit = {
+      val before = c.source.meta.currentSnapshotId.get
+      c.apply(op)
+      perCommit ++= multiset(c.source.changesBetween(before,
+        c.source.meta.currentSnapshotId.get))
+    }
+    val ops = Seq(MorUpsert(List(Some(1L), Some(40L)), 4.5),
+      EqDelete(List(Some(2L), Some(40L))))
+    ops.foreach(step)
+    c.renameKey("id") // materializes first: a rewrite-deletes commit, no rows
+    val after = Append(List((Some(41L), 5.5)))
+    step(after)
+    val head = c.source.meta.currentSnapshotId.get
+    assert(multiset(c.source.changesBetween(start, head)) == perCommit.result().sorted)
+    c.assertConverged(ops :+ after)
+  }
+
   test("a maintenance-only chain advances the cursor without a data commit") {
     val c = new Chain(initialRows)
     c.apply(Compact)

@@ -1049,4 +1049,21 @@ class GraftTableSpec extends SparkSpec {
       case _ => ()
     }
   }
+
+  test("a table deleted and re-created at its location is never served the old metadata") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = tmp()
+    def create(c: String): GraftTable = GraftTable.createEmpty(spark, dir,
+      StructType(Seq(StructField(c, LongType))))
+    assert(create("a").meta.schema.fieldNames.toSeq == Seq("a")) // cached
+    val v1 = new java.io.File(MetaIO.metadataPath(dir, 1)) // a local path
+    val (mtime, len) = (v1.lastModified, v1.length)
+    MetaIO.delete(conf, dir)
+    create("b")
+    // the re-created first metadata file matches the cached entry's
+    // (location, version, mtime, length) identity
+    assert(v1.length == len, "same-length metadata: the case under test")
+    assert(v1.setLastModified(mtime))
+    assert(GraftTable.load(spark, dir).meta.schema.fieldNames.toSeq == Seq("b"))
+  }
 }

@@ -1,6 +1,6 @@
 package graft.tables
 
-import graft.SparkSpec
+import graft.{Compiles, SparkSpec}
 import graft.sources.Tables
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
@@ -9,11 +9,13 @@ import org.apache.spark.sql.graftbridge.Bridge
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-/** Pinned Spark job budgets for the changelog consumers. Counts, never
-  * times: on a fixed small fixture (and the suite's fixed `local[4]`
-  * session) the number of jobs an operation launches is deterministic, so
-  * a change that adds a job — or slides back to 32-task stages over a few
-  * KB of changelog — fails here however noisy the machine is.
+/** Pinned Spark job and compile budgets for the changelog consumers.
+  * Counts, never times: on a fixed small fixture (and the suite's fixed
+  * `local[4]` session) the number of jobs an operation launches, and the
+  * generated classes it has to compile once its plan shapes have run, are
+  * deterministic, so a change that adds a job, slides back to 32-task
+  * stages over a few KB of changelog, or writes per-commit values into
+  * generated code fails here however noisy the machine is.
   */
 class JobBudgetSpec extends SparkSpec {
   import JobBudgetSpec.Cost
@@ -34,14 +36,30 @@ class JobBudgetSpec extends SparkSpec {
     l
   }
 
-  /** Jobs and tasks `body` launches, every listener event delivered. */
+  /** Jobs and tasks `body` launches, every listener event delivered, and
+    * the classes it compiles.
+    */
   private def cost[A](body: => A): (A, Cost) = {
     listener
     Bridge.drainListenerBus(spark)
     val (j0, t0) = (jobs.get, tasks.get)
-    val r = body
+    val (r, c) = Compiles.during(body)
     Bridge.drainListenerBus(spark)
-    (r, Cost(jobs.get - j0, tasks.get - t0))
+    (r, Cost(jobs.get - j0, tasks.get - t0, c.count))
+  }
+
+  /** A fixture whose refresh and sync have run every plan shape of a
+    * steady cycle. Each of the first three cycles meets shapes for the
+    * first time (the first has no upsert to materialize; the third's
+    * refresh still compiled two classes, for a broadcast anti-join it
+    * plans for the first time); later cycles repeat them.
+    */
+  private def warmFixture(): Fixture = {
+    val f = new Fixture
+    for (_ <- 1 to 3) {
+      f.cycle(); f.view.refresh(); TableReplicator.sync(spark, f.replicaLoc)
+    }
+    f
   }
 
   /** Source with a 3-group view and a replica; each `cycle` appends,
@@ -107,8 +125,31 @@ class JobBudgetSpec extends SparkSpec {
     val (src, rep) = (f.base.toDF(), GraftTable.load(spark, f.replicaLoc).toDF())
     assert(src.exceptAll(rep).isEmpty && rep.exceptAll(src).isEmpty)
   }
+
+  test("a warm same-shape refresh and sync compile no generated code") {
+    val f = warmFixture()
+    f.cycle()
+    val (_, refresh) = cost(f.view.refresh())
+    val (_, sync) = cost(TableReplicator.sync(spark, f.replicaLoc))
+    info(s"refresh: $refresh, sync: $sync")
+    assert(refresh.compiles == 0, s"refresh recompiled: $refresh")
+    assert(sync.compiles == 0, s"sync recompiled: $sync")
+  }
+
+  test("a sync over the same commit kinds at shifted ordinals compiles no generated code") {
+    val f = warmFixture()
+    // a compaction ahead of the cycle moves each data commit one ordinal
+    // (and every commit has a new snapshot id)
+    f.base.compact()
+    f.cycle()
+    f.view.refresh()
+    val (applied, sync) = cost(TableReplicator.sync(spark, f.replicaLoc))
+    info(s"sync: $sync")
+    assert(applied == 5)
+    assert(sync.compiles == 0, s"sync recompiled: $sync")
+  }
 }
 
 object JobBudgetSpec {
-  private final case class Cost(jobs: Int, tasks: Int)
+  private final case class Cost(jobs: Int, tasks: Int, compiles: Long)
 }
