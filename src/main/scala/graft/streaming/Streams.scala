@@ -55,11 +55,8 @@ object Streams {
     // state-store checkpoint commits per micro-batch instead of 32 — the
     // dominant cost of this short-lived query. (A long-lived production
     // stream would size this to state volume instead.)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val q =
-      try agg.writeStream.format("memory").queryName(name).outputMode("append").start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    val q = withStatePartitions(spark)(
+      agg.writeStream.format("memory").queryName(name).outputMode("append").start())
     try {
       q.processAllAvailable()
       // flush: one far-future event closes every real window

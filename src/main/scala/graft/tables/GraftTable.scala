@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{ColumnStat, Histogram, HistogramBin}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import java.util.UUID
 
@@ -630,7 +631,6 @@ class GraftTable(val spark: SparkSession, val location: String) {
       bins: Int): Map[String, ColHistogram] = {
     import org.apache.spark.sql.catalyst.expressions.{CreateArray, Literal}
     import org.apache.spark.sql.catalyst.expressions.aggregate.ApproxCountDistinctForIntervals
-    import org.apache.spark.sql.graftbridge.Bridge
     val numeric = cols.filter { case (l, _) =>
       df.schema(l).dataType.isInstanceOf[NumericType] }
     if (numeric.isEmpty) return Map.empty
@@ -1421,8 +1421,9 @@ class GraftTable(val spark: SparkSession, val location: String) {
     * version file directly — the catalog becomes the single commit
     * arbiter (reference interoperability.md:5, the "register a catalog"
     * integration leg). The delegate throws
-    * `ConcurrentModificationException` on conflict, which the existing
-    * append rebase-and-retry loop handles unchanged.
+    * `ConcurrentModificationException` on conflict, which
+    * [[commitRebasing]] treats as a lost CAS: appends and merges rebase
+    * and retry, every other commit fails loudly.
     */
   @volatile private[graft] var commitDelegate: Option[TableMeta => Unit] = None
 
@@ -1505,21 +1506,10 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val laidOut =
       if (sortCols.isEmpty) distributed
       else distributed.sortWithinPartitions((gpCols ++ sortCols).map(col): _*)
-    // point-lookup pruning beyond min/max: the `write.bloom-columns`
-    // property turns on parquet's NATIVE per-row-group bloom filters for
-    // the listed columns (the scale-correct home for blooms — sized by the
-    // writer, read back automatically by the parquet reader for `=` and
-    // IN predicates; manifests stay O(min/max))
-    val bloomCols = m.properties.get(TableFormat.BloomColumns)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val writer = bloomCols.foldLeft(laidOut.write) { (w, c) =>
-      w.option(s"parquet.bloom.filter.enabled#$c", "true")
-    }
     // INT64-micros timestamps (not INT96): footer min/max stats for
     // timestamp columns are only usable in this encoding. Target file
     // size (Iceberg write.target-file-size-bytes) rides AQE's advisory
-    // partition size for this write's shuffle. Session confs are
-    // restored — other writers in the session keep their own settings.
+    // partition size for this write's shuffle.
     val target = m.properties.get(TableFormat.TargetFileSize)
     val writeConfs = Map(
       "spark.sql.parquet.outputTimestampType" -> Some("TIMESTAMP_MICROS"),
@@ -1530,19 +1520,27 @@ class GraftTable(val spark: SparkSession, val location: String) {
         target.map(_ => "false"),
       "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> target
     ).collect { case (k, Some(v)) => k -> v }
-      // drop no-op sets (the session already carries the value — true for
-      // outputTimestampType, a GraftSession default): a write that mutates
-      // NOTHING is safe to run concurrently with other session actions
       .filter { case (k, v) => !spark.conf.getOption(k).contains(v) }
-    val prevConfs = writeConfs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    writeConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      if (gpCols.isEmpty) writer.parquet(commitDir)
-      else writer.partitionBy(gpCols: _*).parquet(commitDir)
-    } finally prevConfs.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    // the session is never mutated: when it already carries every value
+    // (a GraftSession writing to a table without a target size) the write
+    // runs on it; otherwise on a private clone carrying the differing
+    // confs, so other actions planning on the shared session meanwhile
+    // keep their own settings
+    val toWrite =
+      if (writeConfs.isEmpty) laidOut
+      else Bridge.ofRows(Bridge.cloneSession(spark, writeConfs), Bridge.analyzed(laidOut))
+    // point-lookup pruning beyond min/max: the `write.bloom-columns`
+    // property turns on parquet's NATIVE per-row-group bloom filters for
+    // the listed columns (the scale-correct home for blooms — sized by the
+    // writer, read back automatically by the parquet reader for `=` and
+    // IN predicates; manifests stay O(min/max))
+    val bloomCols = m.properties.get(TableFormat.BloomColumns)
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+    val writer = bloomCols.foldLeft(toWrite.write) { (w, c) =>
+      w.option(s"parquet.bloom.filter.enabled#$c", "true")
     }
+    if (gpCols.isEmpty) writer.parquet(commitDir)
+    else writer.partitionBy(gpCols: _*).parquet(commitDir)
     // stamp the data sequence number of the commit these files land in
     // (single-writer: the caller commits against the same base meta)
     collectFileEntries(commitDir, m, spec.specId).map(_.copy(seq = nextSnapshotId(m)))
@@ -1828,7 +1826,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // append()/appendToBranch invariant that new rows are never hit by
     // older merge-on-read predicates. Materialize them first.
     if (currentManifest().deletePredicates.nonEmpty) { materializeDeletes(); () }
-    var m = meta
+    val m = meta
     val delDir = s"$location/deletes/${UUID.randomUUID().toString.take(8)}"
     val upsertKeys = upserts.select(keyColsStamped(keyCols, m.schema): _*)
     val keyUnion = deletedKeys.map(d => upsertKeys.unionByName(
@@ -1845,25 +1843,18 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val keyDf = if (keysDistinct) keyUnion else keyUnion.distinct()
     // The delete-key write and the data write are independent actions on
     // tiny frames whose cost is mostly fixed per-job latency; run them
-    // CONCURRENTLY (guide §1.2 — overlap fixed costs you can't remove).
-    // Only when the table declares no target file size: with one declared,
-    // writeDataFiles must set session-global AQE confs around its write,
-    // and those would leak into a concurrently-planning key write.
-    def writeKeys(): (Seq[String], Map[String, ColStats]) = {
+    // CONCURRENTLY. Neither changes session conf (writeDataFiles plans a
+    // target-size write on its own clone), so they cannot see each other's
+    // settings.
+    val keysWritten = scala.concurrent.Future {
       keyDf.write.parquet(delDir)
       val delFiles = listParquet(delDir)
       Pq.register(delFiles, keyDf.schema)
       (delFiles, eqDeleteStats(delFiles, keyCols, m))
-    }
-    val ((delFiles, delStats), written) =
-      if (m.properties.contains(TableFormat.TargetFileSize)) {
-        (writeKeys(), writeDataFiles(upserts, m))
-      } else {
-        val fut = scala.concurrent.Future(writeKeys())(GraftTable.commitWriteEc)
-        val w = writeDataFiles(upserts, m)
-        (scala.concurrent.Await.result(fut,
-          scala.concurrent.duration.Duration.Inf), w)
-      }
+    }(GraftTable.commitWriteEc)
+    val written = writeDataFiles(upserts, m)
+    val (delFiles, delStats) =
+      scala.concurrent.Await.result(keysWritten, scala.concurrent.duration.Duration.Inf)
     // Iceberg cardinality check at ZERO extra passes: the delete files
     // hold the DISTINCT keys and the data files every row — both counts
     // come from footers already on disk. Fewer distinct keys than rows
@@ -1874,41 +1865,59 @@ class GraftTable(val spark: SparkSession, val location: String) {
       if (distinctKeys < written.map(_.recordCount).sum)
         requireUniqueMergeKeys(upserts, keyCols, "source")
     }
-    val retries = m.properties.get(TableFormat.CommitRetries)
-      .map(_.toInt).getOrElse(4)
     val rowPreserving = Set("replace", "rewrite-deletes")
-    var attempt = 0
+    commitRebasing(m, onAttempt, s => rowPreserving(s.operation)) { b =>
+      val md = currentManifest(b)
+      val seq = nextSnapshotId(b)
+      val newFiles = written.map(_.copy(seq = seq))
+      commitSnapshot(b, md.files ++ newFiles, "upsert-mor", newFiles.size,
+        deletePredicates = md.deletePredicates,
+        positionDeleteFiles = md.positionDeleteFiles,
+        equalityDeletes = md.equalityDeletes :+
+          EqualityDelete(keyCols, delFiles, seq, delStats),
+        extraProperties = extraProperties)
+    }
+    this
+  }
+
+  /** The optimistic commit loop of appends and merge-on-read merges
+    * (Iceberg `commit.retry.num-retries`): `attempt` builds and publishes one
+    * commit on a base, a CAS on the next metadata version. A writer that
+    * loses the CAS re-reads the table and runs `attempt` again on the
+    * winner's metadata — its files are already written (commit dirs are
+    * writer-unique), so a retry re-points them and rewrites no data. The
+    * rebase is refused, the loser's ConcurrentModificationException
+    * propagating, when the retry budget is spent or the winner changed
+    * what the new files mean: the schema, the partition spec, pending
+    * predicate deletes that would capture the new rows, or a new snapshot
+    * `rebaseOver` rejects. An empty set of new snapshots is a pure
+    * metadata-version race (a property commit) and always rebases.
+    */
+  private def commitRebasing(base: TableMeta, onAttempt: Int => Unit,
+      rebaseOver: Snapshot => Boolean)(attempt: TableMeta => Unit): Unit = {
+    val retries = base.properties.get(TableFormat.CommitRetries)
+      .map(_.toInt).getOrElse(4)
+    var m = base
+    var n = 0
     var committed = false
     while (!committed) {
-      onAttempt(attempt) // test seam: deterministic mid-flight conflicts
-      val md = currentManifest(m)
-      val seq = nextSnapshotId(m)
-      val newFiles = written.map(_.copy(seq = seq))
+      onAttempt(n) // test seam: deterministic mid-flight conflicts
       try {
-        commitSnapshot(m, md.files ++ newFiles, "upsert-mor", newFiles.size,
-          deletePredicates = md.deletePredicates,
-          positionDeleteFiles = md.positionDeleteFiles,
-          equalityDeletes = md.equalityDeletes :+
-            EqualityDelete(keyCols, delFiles, seq, delStats),
-          extraProperties = extraProperties)
+        attempt(m)
         committed = true
       } catch {
         case e: java.util.ConcurrentModificationException =>
-          attempt += 1
+          n += 1
           val fresh = meta
-          val newSince = fresh.snapshots
-            .filterNot(s => m.snapshots.exists(_.id == s.id))
-          // an empty newSince is a pure metadata-version race (property
-          // commit) — always safe to rebase onto
-          if (attempt > retries || fresh.schema != m.schema ||
+          val seen = m.snapshots.map(_.id).toSet
+          if (n > retries || fresh.schema != m.schema ||
               fresh.currentSpecId != m.currentSpecId ||
-              !newSince.forall(s => rowPreserving.contains(s.operation)) ||
+              !fresh.snapshots.filterNot(s => seen(s.id)).forall(rebaseOver) ||
               currentManifest(fresh).deletePredicates.nonEmpty)
             throw e
           m = fresh
       }
     }
-    this
   }
 
   private def listParquet(dir: String): Seq[String] = {
@@ -2071,21 +2080,15 @@ class GraftTable(val spark: SparkSession, val location: String) {
       extraProperties: Map[String, String]): GraftTable =
     appendWithRetry(df, extraProperties = extraProperties)
 
-  /** The concurrent-writer append (Iceberg `commit.retry.num-retries`
-    * behavior): the commit is a CAS on the next metadata version; a
-    * writer that loses the race re-reads the winner's manifest, re-points
-    * its ALREADY-WRITTEN data files onto the fresh base (no data
-    * rewrite — commit dirs are writer-unique), and retries. The rebase is
-    * refused — loud ConcurrentModificationException, like every
-    * non-append commit — when the winning commit is semantically
-    * conflicting: schema or partition spec changed, or pending predicate
-    * deletes landed that would capture the new rows.
+  /** The concurrent-writer append: rebases through [[commitRebasing]]
+    * over any winning commit, since new rows conflict with no other
+    * writer's rows; only the shared refusal rules apply.
     */
   private[tables] def appendWithRetry(df: DataFrame,
       onAttempt: Int => Unit = _ => (),
       extraProperties: Map[String, String] = Map.empty): GraftTable = {
     if (currentManifest().deletePredicates.nonEmpty) { materializeDeletes(); () }
-    var m = meta
+    val m = meta
     val written = writeDataFiles(df, m)
     // Puffin fold: when live ANALYZE stats exist, sketch the APPENDED rows
     // once (one extra O(batch) agg — never a table rescan) so the commit
@@ -2102,19 +2105,14 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // in hand from the write) merge into the live payload — no manifest
     // rescan at any table size
     val incomingParts: Seq[PartitionStatEntry] = partitionEntriesOf(written)
-    val retries = m.properties.get(TableFormat.CommitRetries)
-      .map(_.toInt).getOrElse(4)
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      onAttempt(attempt) // test seam: deterministic mid-flight conflicts
-      val md = currentManifest(m)
-      val seq = nextSnapshotId(m)
+    commitRebasing(m, onAttempt, _ => true) { b =>
+      val md = currentManifest(b)
+      val seq = nextSnapshotId(b)
       val newFiles = written.map(_.copy(seq = seq))
       // merge against the CURRENT base's stats (a rebase may have moved
       // them); the new stamp rides the data commit atomically
       val statsProps: Map[String, String] = incoming.flatMap { case (k, ns) =>
-        currentStats(m).collect { case sp if sp.k == k =>
+        currentStats(b).collect { case sp if sp.k == k =>
           val merged = sp.sketches.map { case (p, arr) =>
             p -> ns.get(p).map(n => mergeSketch(arr, n, k)).getOrElse(arr) }
           val name = MetaIO.newStatsName(seq)
@@ -2126,7 +2124,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
             TableFormat.StatsFile -> name)
         }
       }.getOrElse(Map.empty)
-      val partStatsProps: Map[String, String] = partitionStats(m).map { pp =>
+      val partStatsProps: Map[String, String] = partitionStats(b).map { pp =>
         val merged = (pp.entries ++ incomingParts)
           .groupBy(e => (e.specId, e.partition)).toSeq
           .map { case ((sid, part), es) => PartitionStatEntry(sid, part,
@@ -2139,22 +2137,10 @@ class GraftTable(val spark: SparkSession, val location: String) {
         Map(TableFormat.PartStatsSnapshot -> seq.toString,
           TableFormat.PartStatsFile -> name)
       }.getOrElse(Map.empty)
-      try {
-        commitSnapshot(m, md.files ++ newFiles, "append", newFiles.size,
-          positionDeleteFiles = md.positionDeleteFiles,
-          equalityDeletes = md.equalityDeletes,
-          extraProperties = extraProperties ++ statsProps ++ partStatsProps)
-        committed = true
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          val fresh = meta
-          if (attempt > retries || fresh.schema != m.schema ||
-              fresh.currentSpecId != m.currentSpecId ||
-              currentManifest(fresh).deletePredicates.nonEmpty)
-            throw e
-          m = fresh
-      }
+      commitSnapshot(b, md.files ++ newFiles, "append", newFiles.size,
+        positionDeleteFiles = md.positionDeleteFiles,
+        equalityDeletes = md.equalityDeletes,
+        extraProperties = extraProperties ++ statsProps ++ partStatsProps)
     }
     this
   }
@@ -3364,8 +3350,9 @@ object GraftTable {
 
   /** Small daemon pool for overlapping a commit's independent write
     * actions (merge delete-key file vs data files). Spark job submission
-    * is thread-safe; the pool is tiny because each task is one blocking
-    * Spark action, not compute.
+    * is thread-safe and no write changes session conf, so the overlap is
+    * safe on every table; the pool is tiny because each task is one
+    * blocking Spark action, not compute.
     */
   private[tables] lazy val commitWriteEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(

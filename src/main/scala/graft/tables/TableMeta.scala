@@ -72,8 +72,9 @@ object TableFormat {
   val PartStatsFile = "graft.partition-stats.file"
   /** Bounded retry count for non-conflicting commits that lose the
     * version CAS (Iceberg `commit.retry.num-retries`, default 4): an
-    * append re-points its already-written files onto the winner's
-    * manifest and retries — no data rewrite.
+    * append or merge re-points its already-written files onto the
+    * winner's manifest and retries — no data rewrite. A merge rebases
+    * only over row-preserving commits (`replace`, `rewrite-deletes`).
     */
   val CommitRetries = "commit.retry.num-retries"
   /** Write-time sort order (Iceberg SortOrder + `write.distribution-mode`):
@@ -132,7 +133,8 @@ object TableFormat {
     * `write.target-file-size-bytes`): served to AQE as the advisory
     * partition size for the write's shuffle, so range/hash-distributed
     * writes coalesce to files of roughly this size instead of whatever
-    * `spark.sql.shuffle.partitions` dictates.
+    * `spark.sql.shuffle.partitions` dictates. Each such write plans on
+    * its own clone of the session; the session's conf is never changed.
     */
   val TargetFileSize = "write.target-file-size-bytes"
 }

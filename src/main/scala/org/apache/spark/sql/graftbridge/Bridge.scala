@@ -22,6 +22,17 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSession], plan)
 
+  /** A clone of `spark` (its conf, functions, temp views and installed
+    * planner rules) that also carries `confs`. `cloneSession` is
+    * `private[sql]`; the clone scopes settings to one action without
+    * changing them for anything else planning on `spark`.
+    */
+  def cloneSession(spark: SparkSession, confs: Map[String, String]): SparkSession = {
+    val clone = spark.asInstanceOf[ClassicSession].cloneSession()
+    confs.foreach { case (k, v) => clone.conf.set(k, v) }
+    clone
+  }
+
   /** Block until every listener event posted so far has been delivered
     * (the bus is `private[spark]` and asynchronous), so job and task
     * counts read right after an action are complete. Times out after 60 s.

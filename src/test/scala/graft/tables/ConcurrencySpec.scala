@@ -189,4 +189,119 @@ class ConcurrencySpec extends SparkSpec {
       })
     }
   }
+
+  test("mid-flight schema change refuses an upsert rebase too") {
+    val loc = tmp()
+    GraftTable.createAs(spark, loc, Seq((0L, "base")).toDF("k", "v"))
+    val t1 = GraftTable.load(spark, loc)
+    intercept[java.util.ConcurrentModificationException] {
+      t1.mergeBatchWithRetry(Seq((1L, "mine")).toDF("k", "v"), None, Seq("k"),
+        onAttempt = { a =>
+          if (a == 0) GraftTable.load(spark, loc).addColumn("extra", org.apache.spark.sql.types.StringType)
+        })
+    }
+    assert(!GraftTable.load(spark, loc).toDF().select($"k", $"v")
+      .as[(Long, String)].collect().toSet.contains((1L, "mine")))
+  }
+
+  test("mid-flight predicate delete refuses an upsert rebase too") {
+    val loc = tmp()
+    GraftTable.createAs(spark, loc, Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+    val t1 = GraftTable.load(spark, loc)
+    intercept[java.util.ConcurrentModificationException] {
+      t1.mergeBatchWithRetry(Seq((2L, "b2")).toDF("k", "v"), None, Seq("k"),
+        onAttempt = { a =>
+          if (a == 0) GraftTable.load(spark, loc).deleteMergeOnRead("v = 'b'")
+        })
+    }
+  }
+
+  for ((op, commit) <- Seq[(String, (GraftTable, Int => Unit) => GraftTable)](
+      "append" -> ((t, onAttempt) =>
+        t.appendWithRetry(Seq((100L, "mine")).toDF("k", "v"), onAttempt)),
+      "upsert" -> ((t, onAttempt) =>
+        t.mergeBatchWithRetry(Seq((100L, "mine")).toDF("k", "v"), None, Seq("k"),
+          onAttempt = onAttempt))))
+    test(s"a spent retry budget refuses an $op rebase over a row-preserving commit") {
+      val loc = tmp()
+      GraftTable.createAs(spark, loc,
+        (1L to 40L).map(i => (i, s"v$i")).toDF("k", "v").repartition(4))
+        .setProperties(Map(TableFormat.CommitRetries -> "0"))
+      var attempts = 0
+      intercept[java.util.ConcurrentModificationException] {
+        commit(GraftTable.load(spark, loc), { a =>
+          attempts = a + 1
+          if (a == 0) { GraftTable.load(spark, loc).compact(); () }
+        })
+      }
+      assert(attempts == 1, s"no retry may run on a zero budget, saw $attempts attempt(s)")
+      val t = GraftTable.load(spark, loc)
+      assert(t.meta.snapshots.last.operation == "replace", "the compaction must have landed")
+      val keys = t.toDF().select($"k").as[Long].collect()
+      assert(keys.length == 40 && !keys.contains(100L))
+    }
+
+  private val aqeWriteConfs = Seq(
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize")
+
+  test("target-size writes never change the session's AQE confs, even mid-write") {
+    val target = "4096"
+    val t = GraftTable.createAs(spark, tmp(),
+      (1L to 400L).map(i => (i, s"v$i")).toDF("k", "v"))
+    t.setProperties(Map(TableFormat.TargetFileSize -> target))
+    val tableValues = Map(aqeWriteConfs(0) -> target, aqeWriteConfs(1) -> "false",
+      aqeWriteConfs(2) -> target)
+    def read(): Map[String, Option[String]] =
+      aqeWriteConfs.map(k => k -> spark.conf.getOption(k)).toMap
+    val before = read()
+    assert(tableValues.forall { case (k, v) => !before(k).contains(v) },
+      s"the session must not carry the table's values to begin with: $before")
+    // a second thread samples the session's confs about every millisecond
+    // while an append and a merge write to the table
+    val samples = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, Option[String]]]
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val sampler = new Thread(() =>
+      while (!stop.get) { samples.add(read()); Thread.sleep(1) })
+    sampler.start()
+    try {
+      t.append((401L to 800L).map(i => (i, s"v$i")).toDF("k", "v"))
+      t.mergeBatch((1L to 50L).map(i => (i, s"u$i")).toDF("k", "v"),
+        Some((51L to 60L).map(i => Tuple1(i)).toDF("k")), Seq("k"))
+    } finally {
+      stop.set(true)
+      sampler.join()
+    }
+    import scala.jdk.CollectionConverters._
+    val leaked = samples.asScala.toSeq.filter(s =>
+      tableValues.exists { case (k, v) => s(k).contains(v) })
+    assert(samples.size > 10, s"the sampler took only ${samples.size} samples")
+    assert(leaked.isEmpty,
+      s"${leaked.size} of ${samples.size} samples saw the table's confs: ${leaked.take(1)}")
+    assert(read() == before)
+    val rows = t.toDF().as[(Long, String)].collect().toMap
+    assert(rows.size == 790 && rows(1L) == "u1" && !rows.contains(55L))
+  }
+
+  test("a session writing INT96 timestamps keeps it; its table files still get footer min/max") {
+    val tsKey = "spark.sql.parquet.outputTimestampType"
+    val other = spark.newSession()
+    other.conf.set(tsKey, "INT96")
+    def batch(from: Long): org.apache.spark.sql.DataFrame = other.createDataFrame(
+      (from until from + 20L).map(i => (i, new java.sql.Timestamp(1700000000000L + i * 60000L))))
+      .toDF("k", "ts")
+    val t = GraftTable.createAs(other, tmp(), batch(0L))
+    val seeded = t.currentFiles().map(_.path).toSet
+    t.append(batch(20L))
+    assert(other.conf.get(tsKey) == "INT96")
+    val appended = t.currentFiles().filterNot(f => seeded.contains(f.path))
+    assert(appended.nonEmpty)
+    appended.foreach { f =>
+      val ts = f.stats.get("ts")
+      assert(ts.exists(s => s.min.isDefined && s.max.isDefined),
+        s"${f.path} has no timestamp bounds: $ts")
+    }
+    assert(t.toDF().count() == 40)
+  }
 }

@@ -1009,21 +1009,24 @@ class GraftTableSpec extends SparkSpec {
     val t = GraftTable.createAs(spark, tmp(), base.limit(0))
     t.setSortOrder(Seq("o_orderkey"))
     t.setProperties(Map(TableFormat.TargetFileSize -> "16384"))
+    // per-file (min, max) of `c`, one per file that carries bounds
+    def ranges(fs: Seq[DataFile], c: String): Seq[(Long, Long)] =
+      fs.flatMap(f => f.stats.get(c).flatMap(s =>
+        for { mn <- s.min; mx <- s.max } yield (mn.toString.toLong, mx.toString.toLong)))
+    def assertDisjoint(rs: Seq[(Long, Long)], what: String): Unit =
+      rs.sortBy(_._1).sliding(2).foreach {
+        case Seq((_, hi), (lo2, _)) => assert(hi <= lo2, s"$what: ${rs.sortBy(_._1)}")
+        case _ => ()
+      }
     // one UNSORTED append spanning the whole key range — no cluster() call
     t.append(base.repartition(4))
     // the empty-create seed file is 0-row residue with no stats — skip it
     val files = t.currentFiles().filter(_.recordCount > 0)
     assert(files.size > 1, s"target-file-size must split the append, got ${files.size}")
     // disjoint per-file key ranges (range distribution)
-    val ranges = files.flatMap(f => f.stats.get("o_orderkey").flatMap(s =>
-      for { mn <- s.min; mx <- s.max } yield (mn.toString.toLong, mx.toString.toLong)))
-    assert(ranges.size == files.size, "every file must carry sort-key bounds")
-    val sortedR = ranges.sortBy(_._1)
-    sortedR.sliding(2).foreach {
-      case Seq((_, hi), (lo2, _)) =>
-        assert(hi <= lo2, s"file ranges must be disjoint: $sortedR")
-      case _ => ()
-    }
+    assert(ranges(files, "o_orderkey").size == files.size,
+      "every file must carry sort-key bounds")
+    assertDisjoint(ranges(files, "o_orderkey"), "file ranges must be disjoint")
     // locally sorted inside each file
     val one = spark.read.parquet(files.head.path)
       .select("o_orderkey").collect().map(_.getLong(0))
@@ -1031,6 +1034,20 @@ class GraftTableSpec extends SparkSpec {
     // the point of it all: pruning on the sort key, straight off the append
     assert(t.plannedFiles("o_orderkey <= 100").size < t.currentFiles().size)
     assert(t.toDF().count() == base.count())
+
+    // a merge-on-read upsert of every key (the append's size, so the
+    // target splits it): its data write, overlapped with its delete-key
+    // write, lands several range-separated files
+    val beforeUpsert = t.currentFiles().map(_.path).toSet
+    t.upsertMergeOnRead(base.withColumn("o_totalprice", lit(-1.0)).repartition(4),
+      Seq("o_orderkey"))
+    val upserted = t.currentFiles().filterNot(f => beforeUpsert.contains(f.path))
+    assert(upserted.size > 1, s"target-file-size must split the upsert, got ${upserted.size}")
+    assert(ranges(upserted, "o_orderkey").size == upserted.size,
+      "every upserted file must carry sort-key bounds")
+    assertDisjoint(ranges(upserted, "o_orderkey"), "upserted file ranges must be disjoint")
+    assert(t.toDF().count() == base.count())
+    assert(t.toDF().filter(col("o_totalprice") === -1.0).count() == base.count())
 
     // evolution: a later order change affects NEW writes only
     t.setSortOrder(Seq("o_custkey"))
@@ -1040,14 +1057,8 @@ class GraftTableSpec extends SparkSpec {
       .filter(_.recordCount > 0)
     assert(t.currentFiles().map(_.path).toSet.intersect(before) == before,
       "old files keep their layout — the order change is metadata-only")
-    val custRanges = newFiles.flatMap(f => f.stats.get("o_custkey").flatMap(s =>
-      for { mn <- s.min; mx <- s.max } yield (mn.toString.toLong, mx.toString.toLong)))
-      .sortBy(_._1)
-    custRanges.sliding(2).foreach {
-      case Seq((_, hi), (lo2, _)) =>
-        assert(hi <= lo2, s"new files must range-separate on the NEW order: $custRanges")
-      case _ => ()
-    }
+    assertDisjoint(ranges(newFiles, "o_custkey"),
+      "new files must range-separate on the NEW order")
   }
 
   test("a table deleted and re-created at its location is never served the old metadata") {

@@ -112,6 +112,37 @@ class JobBudgetSpec extends SparkSpec {
     assert(GraftTable.load(spark, f.replicaLoc).meta.snapshots.size == snaps0 + 1)
   }
 
+  // Commit primitives on the same fixture: one data write each, plus the
+  // merges' delete-key write. Each writes one small frame, one task a job.
+  private val AppendJobs = 1
+  private val AppendTaskCeiling = 1
+  private val UpsertJobs = 2
+  private val UpsertTaskCeiling = 2
+  private val MergeJobs = 2
+  private val MergeTaskCeiling = 2
+
+  test("append, upsert and a CDC merge stay within their pinned job and task budgets") {
+    val f = new Fixture
+    f.cycle(); f.view.refresh(); TableReplicator.sync(spark, f.replicaLoc)
+    f.cycle()
+    val (_, append) = cost(f.base.append(orders(60)
+      .withColumn("o_orderkey", col("o_orderkey") + 7000000L)))
+    val (_, upsert) = cost(f.base.upsertMergeOnRead(orders(40)
+      .withColumn("o_totalprice", lit(7.25)), Seq("o_orderkey")))
+    val (_, merge) = cost(f.base.mergeBatch(
+      orders(20).withColumn("o_totalprice", lit(8.25)),
+      Some(orders(60).filter(col("o_orderkey") % 3 === 0)
+        .select((col("o_orderkey") + 7000000L).as("o_orderkey"))),
+      Seq("o_orderkey")))
+    info(s"append: $append, upsert: $upsert, merge: $merge")
+    assert(append.jobs == AppendJobs, s"append job count moved: $append")
+    assert(append.tasks <= AppendTaskCeiling, s"append ran $append")
+    assert(upsert.jobs == UpsertJobs, s"upsert job count moved: $upsert")
+    assert(upsert.tasks <= UpsertTaskCeiling, s"upsert ran $upsert")
+    assert(merge.jobs == MergeJobs, s"merge job count moved: $merge")
+    assert(merge.tasks <= MergeTaskCeiling, s"merge ran $merge")
+  }
+
   test("a sync over N source commits adds exactly one replica snapshot") {
     val f = new Fixture
     for (n <- Seq(1, 3, 6)) {
