@@ -1,7 +1,7 @@
 package graft.tables
 
 import graft.{Compiles, SparkSpec}
-import graft.sources.Tables
+import graft.sources.{GraftSql, Tables}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -141,6 +141,80 @@ class JobBudgetSpec extends SparkSpec {
     assert(upsert.tasks <= UpsertTaskCeiling, s"upsert ran $upsert")
     assert(merge.jobs == MergeJobs, s"merge job count moved: $merge")
     assert(merge.tasks <= MergeTaskCeiling, s"merge ran $merge")
+  }
+
+  /** A three-file table (one create, two appends) registered in a fresh
+    * [[GraftSql]] as `dml`, with a 600-row `src` table beside it whose
+    * keys cover the first 400 of the target's and 200 more.
+    */
+  private def dmlTables(): (GraftTable, GraftSql) = {
+    val t = GraftTable.createAs(spark, tmp(), orders(400))
+    for (i <- 1 to 2) t.append(orders(60)
+      .withColumn("o_orderkey", col("o_orderkey") + 1000000L * i))
+    val g = new GraftSql(spark, Files.createTempDirectory("graft_budget_sql").toString)
+    g.register("dml", t.location)
+    g.register("src", GraftTable.createAs(spark, tmp(), orders(600)).location)
+    (t, g)
+  }
+
+  // Copy-on-write DML and maintenance on `dmlTables`, through the table
+  // API and through GraftSql: name -> (jobs, task ceiling). Each rewrite
+  // runs its touched-files job, then its data write.
+  private val DmlPins: Map[String, (Int, Int)] = Map(
+    "delete" -> (3, 7),
+    "update" -> (3, 7),
+    "mergeInto" -> (7, 13),
+    "sql DELETE" -> (3, 7),
+    "sql MERGE SET * INSERT *" -> (7, 12),
+    "sql MERGE clause list" -> (14, 28),
+    "materializeDeletes" -> (5, 5),
+    "compact" -> (2, 4))
+
+  private def sqlMerge(g: GraftSql, whenClauses: String): Unit = {
+    g.sql(s"MERGE INTO dml AS t USING (SELECT * FROM src) AS s " +
+      s"ON t.o_orderkey = s.o_orderkey $whenClauses")
+    ()
+  }
+
+  // name, untimed preparation, timed operation
+  private val dmlOps: Seq[(String, GraftTable => Any, (GraftTable, GraftSql) => Any)] = Seq(
+    ("delete", _ => (), (t, _) => t.delete("o_orderkey % 7 = 3")),
+    ("update", _ => (), (t, _) =>
+      t.update("o_orderkey % 7 = 4", Map("o_orderpriority" -> "'UPD'"))),
+    ("mergeInto", _ => (), (t, _) => t.mergeInto(
+      orders(40).withColumn("o_orderpriority", lit("M"))
+        .unionAll(orders(20).withColumn("o_orderkey", col("o_orderkey") + 5000000L)),
+      Seq("o_orderkey"))),
+    ("sql DELETE", _ => (), (_, g) => g.sql("DELETE FROM dml WHERE o_orderkey % 7 = 3")),
+    ("sql MERGE SET * INSERT *", _ => (), (_, g) => sqlMerge(g,
+      "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")),
+    // the t39 gate's clause list
+    ("sql MERGE clause list", _ => (), (_, g) => sqlMerge(g,
+      """WHEN MATCHED AND s.o_orderkey % 2 = 0 THEN DELETE
+        |WHEN MATCHED THEN UPDATE SET o_orderpriority = 'UPD'
+        |WHEN NOT MATCHED AND s.o_orderkey % 5 = 0 THEN INSERT *""".stripMargin)),
+    ("materializeDeletes",
+      t => t.upsertMergeOnRead(orders(30).withColumn("o_totalprice", lit(2.5)),
+        Seq("o_orderkey")),
+      (t, _) => t.materializeDeletes()),
+    ("compact", _ => (), (t, _) => t.compact()))
+
+  test("copy-on-write DML, SQL MERGE and DELETE, and maintenance stay within their pinned budgets") {
+    val costs = dmlOps.map { case (name, prep, op) =>
+      // a first run on tables of its own keeps one-time work out of the count
+      for (_ <- 1 to 2) yield {
+        val (t, g) = dmlTables()
+        prep(t)
+        cost(op(t, g))._2
+      }
+    }.map(_.last)
+    val named = dmlOps.map(_._1).zip(costs)
+    info(named.map { case (n, c) => s"$n: $c" }.mkString(", "))
+    named.foreach { case (name, c) =>
+      val (jobs, taskCeiling) = DmlPins(name)
+      assert(c.jobs == jobs, s"$name job count moved: $c")
+      assert(c.tasks <= taskCeiling, s"$name ran $c")
+    }
   }
 
   test("a sync over N source commits adds exactly one replica snapshot") {
