@@ -160,15 +160,8 @@ class GraftSql(val spark: SparkSession, warehouse: String,
   // USING body is extracted separately (takeBalanced for subqueries) so a
   // `JOIN ... ON` inside the subquery can't bind the merge's own ON token
   private val MergeHead = r("""MERGE\s+INTO\s+(\w+)(?:\s+AS\s+(\w+))?\s+USING\s+(.*)""")
-  // the ON capture must not cross a WHEN boundary: a leading conditional
-  // or DELETE clause (general form) would otherwise be swallowed into the
-  // ON string and die downstream as a confusing SQL parse error instead
-  // of dispatching to MergeTailGeneral
-  private val MergeTail =
-    """(?is)^(?:AS\s+)?(?:(\w+)\s+)?ON\s+((?:(?!\bWHEN\b).)*?)\s+WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+((?:(?!\bWHEN\b).)*?)\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s*(.*)$""".r
-  // general clause-list form: conditional clauses, DELETE actions,
-  // update-only / delete-only merges (Iceberg's full MERGE surface)
-  private val MergeTailGeneral =
+  // source alias, ON condition (up to the first WHEN), WHEN-clause list
+  private val MergeOnWhen =
     """(?is)^(?:AS\s+)?(?:(\w+)\s+)?ON\s+(.*?)\s+(WHEN\s+.*)$""".r
   private val Delete = r("""DELETE\s+FROM\s+(\w+)\s+WHERE\s+(.*)""")
   private val Update = r("""UPDATE\s+(\w+)\s+SET\s+(.*?)\s+WHERE\s+(.*)""")
@@ -296,12 +289,9 @@ class GraftSql(val spark: SparkSession, warehouse: String,
             (parts(0), if (parts.length > 1) parts(1) else "")
           }
         rest match {
-          case MergeTail(srcAlias, on, setClause, insClause) =>
-            handleMerge(name, Option(tgtAlias).getOrElse(name),
-              Option(srcAlias).getOrElse("source"), using, on, setClause, insClause)
-          case MergeTailGeneral(srcAlias, on, whenPart) =>
-            handleMergeGeneral(name, Option(tgtAlias).getOrElse(name),
-              Option(srcAlias).getOrElse("source"), using, on, whenPart)
+          case MergeOnWhen(srcAlias, on, whenPart) =>
+            compileMerge(name, Option(tgtAlias).getOrElse(name),
+              Option(srcAlias).getOrElse("source"), using, on, parseWhenClauses(whenPart))
           case _ =>
             throw new IllegalArgumentException(s"unsupported MERGE statement: $stmt")
         }
@@ -556,63 +546,6 @@ class GraftSql(val spark: SparkSession, warehouse: String,
     status("alter-view", name)
   }
 
-  /** MERGE INTO with real clause semantics: `UPDATE SET *` replaces the
-    * matched row with the source row; `UPDATE SET a = e, …` updates only
-    * the listed columns; `INSERT *` / `INSERT [(cols)] VALUES (…)` builds
-    * the inserted row (unlisted columns become NULL). Compiled to one
-    * effective source (updated-matched ∪ inserts) fed to the file-level
-    * copy-on-write [[GraftTable.mergeInto]].
-    */
-  private def handleMerge(name: String, tgtAlias: String, srcAlias: String,
-      using: String, on: String, setClause: String, insClause: String): DataFrame = {
-    val t = table(name)
-    val schema = t.meta.schema
-    val keys = keysFromOn(on)
-    require(keys.nonEmpty, s"no equality keys in MERGE ON clause: $on")
-    val srcDf = runSelect(stripParens(using))
-    if (setClause.trim == "*" && insClause.trim == "*") {
-      // Iceberg's write.merge.mode: the full-row upsert form maps onto the
-      // O(batch) merge-on-read upsert (no target scan) when requested
-      if (t.meta.properties.get("write.merge.mode").contains("merge-on-read"))
-        t.upsertMergeOnRead(conform(name, srcDf), keys)
-      else t.mergeInto(conform(name, srcDf), keys)
-      return status("merge", name)
-    }
-    val tgtView = "__graft_merge_tgt"
-    val srcView = "__graft_merge_src"
-    t.toDF().createOrReplaceTempView(tgtView)
-    srcDf.createOrReplaceTempView(srcView)
-    // MERGE convention: unqualified columns in ON refer to the target
-    val onQ = qualifyBareColumns(on, tgtAlias, schema.fieldNames.toSet)
-    val sets: Map[String, String] =
-      if (setClause.trim == "*") schema.fieldNames.map(c => c -> s"$srcAlias.$c").toMap
-      else parseAssignments(setClause).map { case (k, v) => k.split('.').last -> v }
-    sets.keys.foreach(k => require(schema.fieldNames.contains(k), s"unknown SET column $k"))
-    val matchedCols = schema.fieldNames
-      .map(c => s"${sets.getOrElse(c, s"$tgtAlias.$c")} AS $c").mkString(", ")
-    val insertExprs = buildInsertExprs(schema, srcAlias, insClause)
-    val effSource = spark.sql(
-      s"""SELECT $matchedCols
-         |FROM $tgtView AS $tgtAlias JOIN $srcView AS $srcAlias ON $onQ
-         |UNION ALL
-         |SELECT ${insertExprs.mkString(", ")}
-         |FROM $srcView AS $srcAlias
-         |WHERE NOT EXISTS (SELECT 1 FROM $tgtView AS $tgtAlias WHERE $onQ)""".stripMargin)
-    try t.mergeInto(conform(name, effSource), keys)
-    catch {
-      case e: IllegalArgumentException
-          if e.getMessage != null && e.getMessage.contains("cardinality") =>
-        // the column-assignment rewrite routes (target⋈source) back through
-        // mergeInto, so duplicate TARGET keys also trip the check here —
-        // say so instead of blaming the source
-        throw new IllegalArgumentException(e.getMessage +
-          " (column-assignment MERGE compiles matched rows through a " +
-          "target join: duplicate keys on EITHER side multiply; " +
-          "deduplicate, or use the full-row `UPDATE SET *` form)", e)
-    }
-    status("merge", name)
-  }
-
   /** `CREATE MATERIALIZED VIEW v AS SELECT g…, COUNT(*) AS cnt,
     * SUM(c) AS sum_c… FROM t GROUP BY g…` — the incrementally-maintained
     * aggregate ([[graft.tables.IncrementalAggView]]): the initial
@@ -704,74 +637,90 @@ class GraftSql(val spark: SparkSession, warehouse: String,
     }
   }
 
-  /** The FULL MERGE surface (Iceberg semantics, first-match-wins):
-    * conditional WHEN clauses, DELETE actions, several UPDATE clauses with
-    * different SETs, update-only / delete-only merges. Compiled to three
-    * frames — per-clause updates, deleted keys, per-clause inserts — and
-    * executed as ONE copy-on-write [[GraftTable.mergeApply]] commit that
-    * rewrites only files containing an affected key. Clause conditions may
-    * reference both aliases (qualify columns; bare names resolve in join
-    * scope). Matched rows selected by no clause survive untouched.
+  /** MERGE INTO, Iceberg semantics (first-match-wins clause lists,
+    * conditional WHEN clauses, DELETE actions, update-only and
+    * delete-only forms), compiled to the one MERGE executor,
+    * [[GraftTable.mergeApply]]:
+    *  - The unconditional `UPDATE SET * / INSERT *` pair is the full-row
+    *    upsert: [[GraftTable.mergeInto]], or with
+    *    `write.merge.mode=merge-on-read` the O(batch)
+    *    [[GraftTable.upsertMergeOnRead]] (no target scan).
+    *  - Otherwise each (target, source) pair takes the first MATCHED
+    *    clause whose condition holds. `UPDATE SET a = e, …` builds the
+    *    updated row (unlisted columns keep the target's values) and
+    *    carries the matched target row's key in hidden
+    *    [[GraftTable.targetKey]] columns, so SET may change the key.
+    *    `INSERT *` / `INSERT [(cols)] VALUES (…)` builds each unmatched
+    *    source row (unlisted columns NULL); inserts never match the
+    *    target.
+    * Clause conditions may reference both aliases (qualify columns; bare
+    * names resolve in join scope).
     */
-  private def handleMergeGeneral(name: String, tgtAlias: String,
-      srcAlias: String, using: String, on: String, whenPart: String): DataFrame = {
+  private def compileMerge(name: String, tgtAlias: String, srcAlias: String,
+      using: String, on: String, clauses: Seq[WhenClause]): DataFrame = {
     val t = table(name)
     val schema = t.meta.schema
     val keys = keysFromOn(on)
     require(keys.nonEmpty, s"no equality keys in MERGE ON clause: $on")
-    val clauses = parseWhenClauses(whenPart)
     val srcDf = runSelect(stripParens(using))
-    val tgtView = "__graft_mergeg_tgt"
-    val srcView = "__graft_mergeg_src"
+    def star(c: WhenClause) = c.cond.isEmpty && c.body.trim == "*"
+    if (clauses.size == 2 && clauses.exists(c => c.action == "update" && star(c)) &&
+        clauses.exists(c => c.action == "insert" && star(c))) {
+      if (t.meta.properties.get("write.merge.mode").contains("merge-on-read"))
+        t.upsertMergeOnRead(conform(name, srcDf), keys)
+      else t.mergeInto(conform(name, srcDf), keys)
+      return status("merge", name)
+    }
+    val tgtView = "__graft_merge_tgt"
+    val srcView = "__graft_merge_src"
     t.toDF().createOrReplaceTempView(tgtView)
     srcDf.createOrReplaceTempView(srcView)
+    // MERGE convention: unqualified columns in ON refer to the target
     val onQ = qualifyBareColumns(on, tgtAlias, schema.fieldNames.toSet)
     val pairs = s"$tgtView AS $tgtAlias JOIN $srcView AS $srcAlias ON $onQ"
-
-    // first-match-wins verdict over the MATCHED clauses, evaluated in
-    // declaration order on each (target, source) pair
-    val matchedIdx = clauses.zipWithIndex.filter(_._1.matched)
-    val verdict =
-      if (matchedIdx.isEmpty) "-1"
-      else "CASE " + matchedIdx.map { case (c, i) =>
+    def firstMatch(idx: Seq[(WhenClause, Int)]): String =
+      if (idx.isEmpty) "-1"
+      else "CASE " + idx.map { case (c, i) =>
         s"WHEN (${c.cond.getOrElse("TRUE")}) THEN $i" }.mkString(" ") + " ELSE -1 END"
+    def unionOf(selects: Seq[String]): Option[DataFrame] =
+      if (selects.isEmpty) None else Some(spark.sql(selects.mkString(" UNION ALL ")))
 
-    val updateSelects = matchedIdx.filter(_._1.action == "update").map { case (c, i) =>
+    val matchedIdx = clauses.zipWithIndex.filter(_._1.matched)
+    val verdict = firstMatch(matchedIdx)
+    val hidden = keys.map(GraftTable.targetKey)
+    val updates = unionOf(matchedIdx.filter(_._1.action == "update").map { case (c, i) =>
       val sets: Map[String, String] =
         if (c.body.trim == "*") schema.fieldNames.map(x => x -> s"$srcAlias.$x").toMap
         else parseAssignments(c.body).map { case (k, v) => k.split('.').last -> v }
       sets.keys.foreach(k =>
         require(schema.fieldNames.contains(k), s"unknown SET column $k"))
-      val cols = schema.fieldNames
-        .map(x => s"${sets.getOrElse(x, s"$tgtAlias.$x")} AS $x").mkString(", ")
-      s"SELECT $cols FROM $pairs WHERE ($verdict) = $i"
-    }
-    val updates =
-      if (updateSelects.isEmpty) t.toDF().limit(0)
-      else spark.sql(updateSelects.mkString(" UNION ALL "))
-
+      val cols = schema.fieldNames.map(x => s"${sets.getOrElse(x, s"$tgtAlias.$x")} AS $x") ++
+        keys.zip(hidden).map { case (k, h) => s"$tgtAlias.$k AS $h" }
+      s"SELECT ${cols.mkString(", ")} FROM $pairs WHERE ($verdict) = $i"
+    }).map(conform(name, _, hidden))
     val deleteIdxs = matchedIdx.filter(_._1.action == "delete").map(_._2)
-    val deleteKeys =
-      if (deleteIdxs.isEmpty) t.toDF().select(keys.map(org.apache.spark.sql.functions.col): _*).limit(0)
-      else spark.sql(
-        s"SELECT ${keys.map(k => s"$tgtAlias.$k AS $k").mkString(", ")} " +
-          s"FROM $pairs WHERE ($verdict) IN (${deleteIdxs.mkString(", ")})")
-
+    val deleteKeys = unionOf(if (deleteIdxs.isEmpty) Nil else Seq(
+      s"SELECT ${keys.map(k => s"$tgtAlias.$k AS $k").mkString(", ")} " +
+        s"FROM $pairs WHERE ($verdict) IN (${deleteIdxs.mkString(", ")})"))
     val insertIdx = clauses.zipWithIndex.filter(!_._1.matched)
-    val insVerdict =
-      if (insertIdx.isEmpty) "-1"
-      else "CASE " + insertIdx.map { case (c, j) =>
-        s"WHEN (${c.cond.getOrElse("TRUE")}) THEN $j" }.mkString(" ") + " ELSE -1 END"
-    val insertSelects = insertIdx.map { case (c, j) =>
+    val inserts = unionOf(insertIdx.map { case (c, j) =>
       s"SELECT ${buildInsertExprs(schema, srcAlias, c.body).mkString(", ")} " +
         s"FROM $srcView AS $srcAlias WHERE NOT EXISTS " +
-        s"(SELECT 1 FROM $tgtView AS $tgtAlias WHERE $onQ) AND ($insVerdict) = $j"
-    }
-    val inserts =
-      if (insertSelects.isEmpty) t.toDF().limit(0)
-      else spark.sql(insertSelects.mkString(" UNION ALL "))
+        s"(SELECT 1 FROM $tgtView AS $tgtAlias WHERE $onQ) AND (${firstMatch(insertIdx)}) = $j"
+    }).map(conform(name, _))
 
-    t.mergeApply(conform(name, updates), deleteKeys, conform(name, inserts), keys)
+    try t.mergeApply(updates, deleteKeys, inserts, keys)
+    catch {
+      case e: IllegalArgumentException
+          if e.getMessage != null && e.getMessage.contains("cardinality") =>
+        // updates are (target⋈source) rows, so duplicate TARGET keys also
+        // trip the check here — say so instead of blaming the source
+        throw new IllegalArgumentException(e.getMessage +
+          " (column-assignment MERGE and clause-list MERGE compile matched " +
+          "rows through a target join: duplicate keys on EITHER side " +
+          "multiply; deduplicate, or use the unconditional " +
+          "`UPDATE SET * / INSERT *` form)", e)
+    }
     status("merge", name)
   }
 
@@ -1076,20 +1025,23 @@ class GraftSql(val spark: SparkSession, warehouse: String,
   /** Align a source dataframe to the table schema: by name when every
     * schema column is present (MERGE sources with extra/reordered columns),
     * positionally otherwise (SQL INSERT semantics — `SELECT k + 1, name`
-    * feeds columns in order).
+    * feeds columns in order). `hidden` columns ride along after the
+    * schema's.
     */
-  private def conform(name: String, df: DataFrame): DataFrame = {
+  private def conform(name: String, df: DataFrame,
+      hidden: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.functions.col
     val schema = table(name).meta.schema
     val byName = schema.fieldNames.forall(n => df.columns.exists(_.equalsIgnoreCase(n)))
     val named =
-      if (byName) df.select(schema.fieldNames.map(col): _*)
+      if (byName) df.select((schema.fieldNames ++ hidden).map(col): _*)
       else {
         require(df.columns.length == schema.fields.length,
           s"INSERT column count ${df.columns.length} != table arity ${schema.fields.length}")
         df.toDF(schema.fieldNames: _*)
       }
-    named.select(schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
+    named.select(schema.fields.toSeq.map(f => col(f.name).cast(f.dataType)) ++
+      hidden.map(col): _*)
   }
 
   private def status(op: String, name: String): DataFrame = {

@@ -1404,17 +1404,6 @@ class GraftTable(val spark: SparkSession, val location: String) {
     publicLineage(lineageScan(m.copy(schema = m.schemaAt(snap.schemaId)), md, md.files))
   }
 
-  private def lineagePreserving(m: TableMeta): Boolean =
-    m.properties.get(TableFormat.RowLineagePreserve).contains("true")
-
-  /** Property rider for lineage-materializing rewrite commits: the
-    * permanent marker the v3 export refuses on (rider columns are not
-    * representable as inherited id ranges).
-    */
-  private def lineageMarker(m: TableMeta): Map[String, String] =
-    if (lineagePreserving(m)) Map(TableFormat.RowLineageMaterialized -> "true")
-    else Map.empty
-
   /** Catalog-mediated commits (Iceberg REST catalog,
     * `graft.catalog.RestCatalogClient.table`): when set, commits of this
     * handle are PROPOSED to the delegate instead of CAS-publishing the
@@ -1938,11 +1927,10 @@ class GraftTable(val spark: SparkSession, val location: String) {
   def materializeDeletes(): GraftTable = {
     val m = meta
     val md = currentManifest(m)
-    if (md.deletePredicates.isEmpty && md.positionDeleteFiles.isEmpty &&
-        md.equalityDeletes.isEmpty) return this
+    if (!md.hasDeletes) return this
     val predTouched: Set[String] =
       if (md.deletePredicates.isEmpty) Set.empty
-      else matchingFiles(m, md.deletePredicates.map(p => s"($p)").mkString(" OR "))
+      else matchingFiles(m, md.files, md.deletePredicates.map(p => s"($p)").mkString(" OR "))
         .map(_.path).toSet
     val posTouched: Set[String] =
       if (md.positionDeleteFiles.isEmpty) Set.empty
@@ -1974,15 +1962,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
     }.toSet
     val touched = md.files.filter(f => predTouched.contains(f.path) ||
       posTouched.contains(f.path) || eqTouched.contains(f.path))
-    val rewritten =
-      if (touched.isEmpty) Nil
-      else if (lineagePreserving(m))
-        writeDataFiles(lineageScan(m, md, touched), m)
-      else writeDataFiles(readWithMor(m, md.copy(files = touched), None), m)
-    val untouched = md.files.filterNot(f => touched.exists(_.path == f.path))
-    commitSnapshot(m, untouched ++ rewritten, "rewrite-deletes", rewritten.size,
-      extraProperties = if (rewritten.isEmpty) Map.empty else lineageMarker(m))
-    this
+    // commits even when no file is touched: the delete files still clear
+    rewrite(m, md, touched, "rewrite-deletes")(identity)
   }
 
   /** Fold accumulated merge-on-read delete files — many small per-commit
@@ -2057,11 +2038,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     * older merge-on-read predicates.
     */
   private def ensureMaterialized(): Unit = {
-    val md = currentManifest()
-    if (md.deletePredicates.nonEmpty || md.positionDeleteFiles.nonEmpty ||
-        md.equalityDeletes.nonEmpty) {
-      materializeDeletes(); ()
-    }
+    if (currentManifest().hasDeletes) { materializeDeletes(); () }
   }
 
   /** Append rows (reference INSERT INTO). Predicate merge-on-read deletes
@@ -2242,86 +2219,108 @@ class GraftTable(val spark: SparkSession, val location: String) {
     this
   }
 
-  /** Files that actually contain rows matching `cond` (manifest pruning
-    * first, then an exact scan of only the surviving files).
+  // ------------------------------------------------ copy-on-write rewrite
+
+  /** Boolean column a rewrite's `build` may add to flag the rows it changed. */
+  private val Changed = "__graft_changed"
+
+  /** The one copy-on-write rewrite step behind DML, MERGE,
+    * [[materializeDeletes]], [[compact]] and the clustering rewrites:
+    *  1. read `touched` defaults-aware (the rewrite MATERIALIZES values
+    *     into files that postdate the default boundary, so raw nulls
+    *     would erase the default), with `md`'s pending merge-on-read
+    *     deletes applied, and under [[TableFormat.RowLineagePreserve]]
+    *     carrying each row's `_row_id` and sequence riders
+    *     ([[lineageScan]]);
+    *  2. shape the rows with `build`, which keeps the read's columns and
+    *     may add a boolean [[Changed]] column: a changed row's sequence
+    *     rider resets, so it inherits this commit's sequence number;
+    *  3. write them, with the `added` rows (no riders: they inherit the
+    *     new file's range), laid out by `distribution` when given;
+    *  4. keep every other file of `md`;
+    *  5. commit as `op`. Rider-carrying files mark the table
+    *     [[TableFormat.RowLineageMaterialized]], which the v3 export
+    *     refuses on (riders are not representable as inherited ranges).
     */
-  private def matchingFiles(m: TableMeta, cond: String): Seq[DataFile] = {
-    val cur = currentFiles(m)
+  private def rewrite(m: TableMeta, md: ManifestData, touched: Seq[DataFile],
+      op: String, added: Option[DataFrame] = None,
+      distribution: Option[String] = None)(build: DataFrame => DataFrame): GraftTable = {
+    val preserve = m.properties.get(TableFormat.RowLineagePreserve).contains("true")
+    val rewritten = if (touched.isEmpty) None else Some {
+      val read =
+        if (preserve) lineageScan(m, md, touched)
+        else if (md.hasDeletes) readWithMor(m, md.copy(files = touched), None)
+        else ScanPlanner.scan(spark, m, touched, None)
+      val built = build(read)
+      if (!built.columns.contains(Changed)) built
+      else if (!preserve) built.drop(Changed)
+      else built.withColumn(RowLineage.MatSeq,
+        when(col(Changed), lit(null).cast(LongType)).otherwise(col(RowLineage.MatSeq)))
+        .drop(Changed)
+    }
+    val written = (rewritten.toSeq ++ added)
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .map(writeDataFiles(_, m, distribution)).getOrElse(Nil)
+    val replaced = touched.map(_.path).toSet
+    commitSnapshot(m, md.files.filterNot(f => replaced(f.path)) ++ written, op,
+      written.size, extraProperties =
+        if (preserve && touched.nonEmpty && written.nonEmpty)
+          Map(TableFormat.RowLineageMaterialized -> "true")
+        else Map.empty)
+    this
+  }
+
+  /** Those of `files` that actually contain rows matching `cond` (stats
+    * pruning first, then an exact scan of only the surviving files).
+    */
+  private def matchingFiles(m: TableMeta, files: Seq[DataFile], cond: String): Seq[DataFile] = {
     // defaults-aware: a CoW delete/update predicate on a defaulted
     // column must see the FILLED values (raw nulls would silently skip
     // every pre-add file). scan(Some(cond)) prunes internally — no
     // separate pruneFiles pass (it would run the same stats walk twice).
-    val hit = ScanPlanner.scan(spark, m, cur, Some(cond), rowMeta = true)
+    val hit = ScanPlanner.scan(spark, m, files, Some(cond), rowMeta = true)
       .select(col(ScanPlanner.RowMetaFile)).distinct().collect()
       .map(r => stripScheme(r.getString(0))).toSet
-    cur.filter(f => hit.contains(f.path))
+    files.filter(f => hit.contains(f.path))
   }
 
   /** Copy-on-write DELETE WHERE. */
   def delete(cond: String): GraftTable = {
     ensureMaterialized()
     val m = meta
-    val cur = currentFiles(m)
-    val touched = matchingFiles(m, cond)
+    val md = currentManifest(m)
+    val touched = matchingFiles(m, md.files, cond)
     if (touched.isEmpty) return this
-    // defaults-aware read: the rewrite MATERIALIZES values into files
-    // that postdate the default boundary, so it must read filled values
-    // (raw nulls would silently erase the default for surviving rows).
-    // Under row-lineage preservation the scan additionally rides each
-    // surviving row's _row_id / last-updated seq into the new files.
-    val base =
-      if (lineagePreserving(m)) lineageScan(m, currentManifest(m), touched)
-      else ScanPlanner.scan(spark, m, touched, None)
-    val kept = base.filter(!coalesce(expr(cond), lit(false)))
-    val rewritten = writeDataFiles(kept, m)
-    val untouchedFiles = cur.filterNot(f => touched.exists(_.path == f.path))
-    commitSnapshot(m, untouchedFiles ++ rewritten, "delete", rewritten.size,
-      extraProperties = if (rewritten.isEmpty) Map.empty else lineageMarker(m))
-    this
+    rewrite(m, md, touched, "delete")(_.filter(!coalesce(expr(cond), lit(false))))
   }
 
   /** Copy-on-write UPDATE ... SET (assignments: column -> SQL expr). */
   def update(cond: String, set: Map[String, String]): GraftTable = {
     ensureMaterialized()
     val m = meta
-    val cur = currentFiles(m)
-    val touched = matchingFiles(m, cond)
+    val md = currentManifest(m)
+    val touched = matchingFiles(m, md.files, cond)
     if (touched.isEmpty) return this
-    val preserve = lineagePreserving(m)
-    val base =
-      if (preserve) lineageScan(m, currentManifest(m), touched)
-      else ScanPlanner.scan(spark, m, touched, None) // defaults-aware rewrite
     val hit = coalesce(expr(cond), lit(false))
     // ONE simultaneous projection: the condition and every assignment RHS
     // evaluate against the ORIGINAL row (SQL UPDATE semantics). A
     // column-by-column fold would let later assignments read
     // already-mutated values — SET status='B' WHERE status='A' would
     // flip the condition for every assignment after the first.
-    val projected = m.schema.fields.toSeq.map { f =>
-      set.get(f.name) match {
-        case Some(e) =>
-          when(hit, expr(e).cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-        case None => col(f.name)
-      }
-    } ++ (if (!preserve) Nil else Seq(
-      col(RowLineage.MatRowId),
-      // updated rows inherit THIS commit's sequence number
-      when(hit, lit(null).cast(LongType))
-        .otherwise(col(RowLineage.MatSeq)).as(RowLineage.MatSeq)))
-    val updated = base.select(projected: _*)
-    val rewritten = writeDataFiles(updated, m)
-    val untouchedFiles = cur.filterNot(f => touched.exists(_.path == f.path))
-    commitSnapshot(m, untouchedFiles ++ rewritten, "update", rewritten.size,
-      extraProperties = if (rewritten.isEmpty) Map.empty else lineageMarker(m))
-    this
+    rewrite(m, md, touched, "update") { base =>
+      base.select(base.columns.toSeq.map { c =>
+        set.get(c).fold(col(c))(e =>
+          when(hit, expr(e).cast(m.schema(c).dataType)).otherwise(col(c)).as(c))
+      } :+ hit.as(Changed): _*)
+    }
   }
 
   /** Iceberg's MERGE cardinality check for the merge-on-read path (no
     * probe join to fold into — [[upsertMergeOnRead]] never reads the
     * target): duplicate source keys would land as duplicate rows under
     * one equality delete. One O(|source|) pass over the SMALL side only.
-    * The copy-on-write paths fold the equivalent check into their
-    * touched-files probe join instead (see [[mergeInto]]).
+    * The copy-on-write path folds the equivalent check into its
+    * touched-files probe join instead (see [[mergeApply]]).
     */
   private def requireUniqueMergeKeys(src: DataFrame, keyCols: Seq[String],
       what: String): Unit = {
@@ -2334,14 +2333,13 @@ class GraftTable(val spark: SparkSession, val location: String) {
 
   /** Iceberg MERGE cardinality rule, evaluated INSIDE the probe join that
     * finds touched files (one pass, no separate source scan): fail when a
-    * TARGET ROW matches more than one counted probe row. Returns the set
-    * of file paths holding matched rows. `countFlag` is 1 for probe rows
-    * that participate in the count (updates), 0 for rows that only mark
-    * files touched (delete keys). Matching Iceberg exactly: duplicate
-    * probe keys that match NO target row are legal (they insert).
+    * TARGET ROW matches more than one probe row. The probe holds one
+    * target key per update row and one per distinct deleted key, in the
+    * [[GraftTable.targetKey]] columns. Returns the set of file paths
+    * holding matched rows. Matching Iceberg exactly: duplicate source
+    * keys that match NO target row are legal (they insert).
     */
   private def touchedFilesWithCardinalityCheck(base: DataFrame, probe: DataFrame,
-      joinCond: Column, countFlag: Column, keyDesc: Column,
       keyCols: Seq[String]): Set[String] = {
     val perRow = base
       .withColumnRenamed(ScanPlanner.RowMetaFile, "__fp")
@@ -2356,9 +2354,11 @@ class GraftTable(val spark: SparkSession, val location: String) {
       // single-format, so synthesized ids never mix with real indices
       // inside one group key.
       .withColumn("__pos", coalesce(col("__pos"), monotonically_increasing_id()))
-      .join(probe, joinCond, "inner")
+      .join(probe, keyCols.map(c => col(c) === col(GraftTable.targetKey(c))).reduce(_ && _),
+        "inner")
       .groupBy(col("__fp"), col("__pos"))
-      .agg(sum(countFlag).as("__n"), first(keyDesc).as("__k"))
+      .agg(count(lit(1)).as("__n"), first(concat_ws(",",
+        keyCols.map(c => col(GraftTable.targetKey(c)).cast("string")): _*)).as("__k"))
     val byFile = perRow.groupBy(col("__fp")).agg(
       max(col("__n")).as("__mx"),
       first(when(col("__n") > 1, col("__k")), ignoreNulls = true).as("__dup"))
@@ -2373,137 +2373,70 @@ class GraftTable(val spark: SparkSession, val location: String) {
   }
 
   /** Copy-on-write MERGE INTO (reference
-    * sql/update_iceberg_v2_examples.sql:9-18): WHEN MATCHED → replace the
-    * row with the source row, WHEN NOT MATCHED → insert. `source` must
-    * have the table schema. The Iceberg cardinality check (a target row
-    * matching several source rows would be silently multiplied by the
-    * rewrite's left join) is folded into the touched-files probe join —
-    * no separate pass over the source; duplicate source keys that match
-    * nothing insert normally, as in Iceberg.
-    * Only files containing matched keys are rewritten.
+    * sql/update_iceberg_v2_examples.sql:9-18) in its full-row form: WHEN
+    * MATCHED → replace the row with the source row, WHEN NOT MATCHED →
+    * insert the source row. `source` must have the table schema. This is
+    * the full-row case of [[mergeApply]]: every source row is an update
+    * row for the target row with its key, and the source rows whose key
+    * matches no target row are the inserts.
     */
   def mergeInto(source: DataFrame, keyCols: Seq[String]): GraftTable = {
     ensureMaterialized()
-    val m = meta
-    val cur = currentFiles(m)
-    val target = toDF()
-    val srcRenamed = m.schema.fields.foldLeft(source) { (d, f) =>
-      d.withColumnRenamed(f.name, s"__s_${f.name}") }
-
-    val joinCond = keyCols.map(k => col(k) === col(s"__s_$k")).reduce(_ && _)
-    // files containing at least one matched key (+ cardinality check)
-    val touched: Seq[DataFile] =
-      if (cur.isEmpty) Nil
-      else {
-        val hit = touchedFilesWithCardinalityCheck(
-          ScanPlanner.scan(spark, m, cur, None, rowMeta = true),
-          srcRenamed, joinCond, lit(1L),
-          concat_ws(",", keyCols.map(k => col(s"__s_$k").cast("string")): _*),
-          keyCols)
-        cur.filter(f => hit.contains(f.path))
-      }
-
-    val preserve = lineagePreserving(m)
-    val rewritten: DataFrame = if (touched.isEmpty) null else {
-      val base = // defaults-aware rewrite; preserve-mode rides row ids
-        if (preserve) lineageScan(m, currentManifest(m), touched)
-        else ScanPlanner.scan(spark, m, touched, None)
-      val matched = col(s"__s_${keyCols.head}").isNotNull
-      base.join(srcRenamed, joinCond, "left")
-        .select((m.schema.fields.toSeq.map { f =>
-          when(matched, col(s"__s_${f.name}"))
-            .otherwise(col(f.name)).as(f.name)
-        } ++ (if (!preserve) Nil else Seq(
-          col(RowLineage.MatRowId),
-          // updated rows inherit THIS commit's sequence number
-          when(matched, lit(null).cast(LongType))
-            .otherwise(col(RowLineage.MatSeq)).as(RowLineage.MatSeq)))): _*)
-    }
-    val inserts = source.join(target.select(keyCols.map(col): _*), keyCols, "left_anti")
-      .select(m.schema.fields.map(f => col(f.name)): _*)
-
-    // inserted rows carry no riders (null -> inherit the new file's
-    // range at their positions), so the union fills them as missing
-    val toWrite = (Option(rewritten).toSeq :+ inserts)
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-    val newFiles = writeDataFiles(toWrite, m)
-    val untouchedFiles = cur.filterNot(f => touched.exists(_.path == f.path))
-    commitSnapshot(m, untouchedFiles ++ newFiles, "merge", newFiles.size,
-      extraProperties = if (touched.isEmpty) Map.empty else lineageMarker(m))
-    this
+    mergeApply(Some(source), None,
+      Some(source.join(toDF().select(keyCols.map(col): _*), keyCols, "left_anti")), keyCols)
   }
 
-  /** Generalized MERGE executor (one copy-on-write commit): `updates`
-    * replace their matched rows, `deleteKeys` drop theirs, `inserts`
-    * append — matched rows named by neither survive the rewrite untouched.
-    * Only files containing an affected key are rewritten (same file-level
-    * CoW economics as [[mergeInto]], which is the
-    * update-all/insert-all special case). The Iceberg cardinality check
-    * rides the touched-files probe join: a target row matched by more
-    * than one UPDATE row fails loudly (delete keys count zero — they
-    * only mark files touched, and duplicates among them are harmless).
+  /** The MERGE executor, one copy-on-write commit. Every SQL MERGE and
+    * [[mergeInto]] run through it.
+    *  - `updates` rows replace the target rows they matched. An update
+    *    row names its target row by the [[GraftTable.targetKey]] columns
+    *    when it carries them, else by its own key, so an UPDATE SET may
+    *    change the key.
+    *  - `deleteKeys` rows drop the target rows with their key.
+    *  - `inserts` rows are appended as built; they are never matched
+    *    against the target.
+    * Matched rows named by neither survive untouched, and only files
+    * holding an updated or deleted key are rewritten. The Iceberg
+    * cardinality check rides the touched-files probe join: a target row
+    * matched by more than one update or delete fails loudly. A MERGE that
+    * touches no file and inserts nothing commits nothing.
     */
-  def mergeApply(updates: DataFrame, deleteKeys: DataFrame,
-      inserts: DataFrame, keyCols: Seq[String]): GraftTable = {
+  def mergeApply(updates: Option[DataFrame], deleteKeys: Option[DataFrame],
+      inserts: Option[DataFrame], keyCols: Seq[String]): GraftTable = {
     ensureMaterialized()
     val m = meta
-    val cur = currentFiles(m)
-    // ONE probe frame: update keys keep duplicates (counted per matched
-    // target row), delete keys are distinct'd and flagged out of the count
-    val updProbe = updates.select(keyCols.map(col): _*)
-      .withColumn("__upd", lit(1L))
-    val delProbe = deleteKeys.select(keyCols.map(col): _*).distinct()
-      .withColumn("__upd", lit(0L))
-    val keyed = keyCols.foldLeft(updProbe.unionByName(delProbe)) { (d, c) =>
-      d.withColumnRenamed(c, s"__k_$c") }
-
-    val touched: Seq[DataFile] =
-      if (cur.isEmpty) Nil
-      else {
-        val base = ScanPlanner.scan(spark, m, cur, None, rowMeta = true)
-        val hit = touchedFilesWithCardinalityCheck(base, broadcast(keyed),
-          keyCols.map(c => base(c) === keyed(s"__k_$c")).reduce(_ && _),
-          col("__upd"),
-          concat_ws(",", keyCols.map(c => col(s"__k_$c").cast("string")): _*),
-          keyCols)
-        cur.filter(f => hit.contains(f.path))
+    val md = currentManifest(m)
+    val tk = keyCols.map(GraftTable.targetKey)
+    // an update row's target key: its hidden target-key columns, else its own key
+    def targetKeyOf(u: DataFrame): Seq[String] =
+      keyCols.zip(tk).map { case (c, k) => if (u.columns.contains(k)) k else c }
+    val delKeys = deleteKeys.map(d =>
+      d.select(keyCols.zip(tk).map { case (c, k) => col(c).as(k) }: _*).distinct())
+    val probe = (updates.map(u =>
+      u.select(targetKeyOf(u).zip(tk).map { case (c, k) => col(c).as(k) }: _*)).toSeq ++ delKeys)
+      .reduceOption(_ unionByName _)
+    val touched = probe.filter(_ => md.files.nonEmpty).fold(Seq.empty[DataFile]) { p =>
+      val hit = touchedFilesWithCardinalityCheck(
+        ScanPlanner.scan(spark, m, md.files, None, rowMeta = true), p, keyCols)
+      md.files.filter(f => hit.contains(f.path))
+    }
+    if (touched.isEmpty && inserts.forall(_.isEmpty)) return this
+    rewrite(m, md, touched, "merge",
+      inserts.map(_.select(m.schema.fieldNames.toSeq.map(col): _*))) { base =>
+      val kept = delKeys.fold(base)(d => base.join(d,
+        keyCols.zip(tk).map { case (c, k) => base(c) === d(k) }.reduce(_ && _), "left_anti"))
+      updates.fold(kept) { u =>
+        val upd = u.select(u.columns.toSeq.map(c => col(c).as(s"__u_$c")): _*)
+        val on = targetKeyOf(u).map(k => s"__u_$k")
+        val matched = col(on.head).isNotNull
+        kept.join(upd, keyCols.zip(on).map { case (c, k) => kept(c) === upd(k) }.reduce(_ && _),
+          "left").select(base.columns.toSeq.map { c =>
+            if (m.schema.fieldNames.contains(c))
+              when(matched, col(s"__u_$c")).otherwise(col(c)).as(c)
+            else col(c)
+          } :+ matched.as(Changed): _*)
       }
-
-    val preserve = lineagePreserving(m)
-    val rewritten: Option[DataFrame] =
-      if (touched.isEmpty) None
-      else {
-        val base = // defaults-aware rewrite; preserve-mode rides row ids
-          if (preserve) lineageScan(m, currentManifest(m), touched)
-          else ScanPlanner.scan(spark, m, touched, None)
-        val delKeyed = keyCols.foldLeft(deleteKeys.select(keyCols.map(col): _*)
-          .distinct()) { (d, c) => d.withColumnRenamed(c, s"__d_$c") }
-        val updRenamed = m.schema.fieldNames.foldLeft(updates) { (d, c) =>
-          d.withColumnRenamed(c, s"__u_$c") }
-        val minusDeleted = base.join(delKeyed,
-          keyCols.map(c => base(c) === delKeyed(s"__d_$c")).reduce(_ && _),
-          "left_anti")
-        val joined = minusDeleted.join(updRenamed,
-          keyCols.map(c => minusDeleted(c) === updRenamed(s"__u_$c")).reduce(_ && _),
-          "left")
-        val matched = col(s"__u_${keyCols.head}").isNotNull
-        Some(joined.select((m.schema.fieldNames.toSeq.map { c =>
-          when(matched, col(s"__u_$c")).otherwise(col(c)).as(c)
-        } ++ (if (!preserve) Nil else Seq(
-          col(RowLineage.MatRowId),
-          when(matched, lit(null).cast(LongType))
-            .otherwise(col(RowLineage.MatSeq)).as(RowLineage.MatSeq)))): _*))
-      }
-
-    if (touched.isEmpty && inserts.isEmpty) return this // nothing to do
-    val toWrite = (rewritten.toSeq :+ inserts.select(
-      m.schema.fieldNames.map(col).toSeq: _*))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-    val newFiles = writeDataFiles(toWrite, m)
-    val untouchedFiles = cur.filterNot(f => touched.exists(_.path == f.path))
-    commitSnapshot(m, untouchedFiles ++ newFiles, "merge", newFiles.size,
-      extraProperties = if (touched.isEmpty) Map.empty else lineageMarker(m))
-    this
+    }
   }
 
   // ------------------------------------------------------------- refs
@@ -2826,26 +2759,19 @@ class GraftTable(val spark: SparkSession, val location: String) {
   def compact(targetBytes: Long = 128L << 20): GraftTable = {
     ensureMaterialized()
     val m = meta
-    val cur = currentFiles(m)
-    val small = cur.filter(_.sizeBytes < targetBytes)
+    val md = currentManifest(m)
+    val small = md.files.filter(_.sizeBytes < targetBytes)
       .groupBy(f => (f.specId, f.partitionValues)).filter(_._2.size > 1)
       .values.flatten.toSeq
     if (small.isEmpty) return this
     val totalBytes = small.map(_.sizeBytes).sum
     val nOut = math.max(1, (totalBytes / targetBytes).toInt)
+    val hadLive = partitionStats(m).nonEmpty
     // defaults materialize into the compacted files (Iceberg rewrites
     // do the same); once no pre-add file remains, fastMinMax serves
     // again. Lineage-preserving tables carry each row's id through the
     // repack — compaction reorders rows, so inheritance alone can't.
-    val packed =
-      (if (lineagePreserving(m)) lineageScan(m, currentManifest(m), small)
-       else ScanPlanner.scan(spark, m, small, None))
-        .repartition(nOut)
-    val newFiles = writeDataFiles(packed, m)
-    val untouched = cur.filterNot(f => small.exists(_.path == f.path))
-    val hadLive = partitionStats(m).nonEmpty
-    commitSnapshot(m, untouched ++ newFiles, "replace", newFiles.size,
-      extraProperties = lineageMarker(m))
+    rewrite(m, md, small, "replace")(_.repartition(nOut))
     refreshPartitionStatsIfLive(hadLive)
     this
   }
@@ -2855,25 +2781,24 @@ class GraftTable(val spark: SparkSession, val location: String) {
     * min/max stats pruning on those columns approaches partition-pruning
     * effectiveness without a partition spec).
     */
-  def cluster(cols: Seq[String], nFiles: Int = 0): GraftTable = {
+  def cluster(cols: Seq[String], nFiles: Int = 0): GraftTable =
+    clusterRewrite(nFiles)((base, n) =>
+      base.repartitionByRange(n, cols.map(col): _*).sortWithinPartitions(cols.map(col): _*))
+
+  /** Rewrite every file of the table into `layout`'s `n` range-sorted
+    * parts, `n` being `nFiles` or else one per 128 MB.
+    */
+  private def clusterRewrite(nFiles: Int)(layout: (DataFrame, Int) => DataFrame): GraftTable = {
     ensureMaterialized()
     val m = meta
-    val cur = currentFiles(m)
-    if (cur.isEmpty) return this
+    val md = currentManifest(m)
+    if (md.files.isEmpty) return this
     val n = if (nFiles > 0) nFiles
-      else math.max(1, (cur.map(_.sizeBytes).sum / (128L << 20)).toInt)
-    val src = // defaults-aware rewrite; preserve-mode rides row ids through
-      if (lineagePreserving(m)) lineageScan(m, currentManifest(m), cur)
-      else ScanPlanner.scan(spark, m, cur, None)
-    val sorted = src
-      .repartitionByRange(n, cols.map(col): _*)
-      .sortWithinPartitions(cols.map(col): _*)
-    // distribution 'none': a hash-by-partition repartition here would
-    // destroy the range layout this rewrite just produced
-    val newFiles = writeDataFiles(sorted, m, distributionOverride = Some("none"))
+      else math.max(1, (md.files.map(_.sizeBytes).sum / (128L << 20)).toInt)
     val hadLive = partitionStats(m).nonEmpty
-    commitSnapshot(m, newFiles, "replace", newFiles.size,
-      extraProperties = lineageMarker(m))
+    // distribution 'none': a hash-by-partition repartition here would
+    // destroy the range layout this rewrite produces
+    rewrite(m, md, md.files, "replace", distribution = Some("none"))(layout(_, n))
     refreshPartitionStatsIfLive(hadLive)
     this
   }
@@ -2926,45 +2851,32 @@ class GraftTable(val spark: SparkSession, val location: String) {
   private def clusterByCurve(cols: Seq[String], nFiles: Int)(
       curve: (Seq[Column], Int) => Column): GraftTable = {
     require(cols.size >= 2, "curve clustering needs at least two columns")
-    ensureMaterialized()
-    val m = meta
-    val cur = currentFiles(m)
-    if (cur.isEmpty) return this
-    val base = // defaults-aware bounds; preserve-mode rides row ids through
-      if (lineagePreserving(m)) lineageScan(m, currentManifest(m), cur)
-      else ScanPlanner.scan(spark, m, cur, None)
-    val st = base.agg(
-      min(col(cols.head).cast("double")),
-      (Seq(max(col(cols.head).cast("double"))) ++
-        cols.tail.flatMap(c => Seq(min(col(c).cast("double")), max(col(c).cast("double"))))): _*
-    ).head()
-    // an all-null column yields null min/max: treat it as constant (curve
-    // bits 0 for that axis) instead of crashing the rewrite
-    def statAt(i: Int): Double = if (st.isNullAt(i)) 0.0 else st.getDouble(i)
+    // the bounds read the rewrite's own (defaults-aware) rows
+    clusterRewrite(nFiles) { (base, n) =>
+      val st = base.agg(
+        min(col(cols.head).cast("double")),
+        (Seq(max(col(cols.head).cast("double"))) ++
+          cols.tail.flatMap(c => Seq(min(col(c).cast("double")), max(col(c).cast("double"))))): _*
+      ).head()
+      // an all-null column yields null min/max: treat it as constant (curve
+      // bits 0 for that axis) instead of crashing the rewrite
+      def statAt(i: Int): Double = if (st.isNullAt(i)) 0.0 else st.getDouble(i)
 
-    val bits = math.min(16, 63 / cols.size)
-    val maxVal = (1L << bits) - 1
-    def normBits(c: String, lo: Double, hi: Double): Column =
-      if (hi <= lo) lit(0L)
-      else least(lit(maxVal), greatest(lit(0L),
-        ((col(c).cast("double") - lit(lo)) / lit(hi - lo) * maxVal.toDouble).cast("long")))
+      val bits = math.min(16, 63 / cols.size)
+      val maxVal = (1L << bits) - 1
+      def normBits(c: String, lo: Double, hi: Double): Column =
+        if (hi <= lo) lit(0L)
+        else least(lit(maxVal), greatest(lit(0L),
+          ((col(c).cast("double") - lit(lo)) / lit(hi - lo) * maxVal.toDouble).cast("long")))
 
-    val normed = cols.zipWithIndex.map { case (c, j) =>
-      normBits(c, statAt(2 * j), statAt(2 * j + 1))
+      val normed = cols.zipWithIndex.map { case (c, j) =>
+        normBits(c, statAt(2 * j), statAt(2 * j + 1))
+      }
+      base.withColumn("__curve", curve(normed, bits))
+        .repartitionByRange(n, col("__curve"))
+        .sortWithinPartitions(col("__curve"))
+        .drop("__curve")
     }
-    val key = curve(normed, bits)
-    val n = if (nFiles > 0) nFiles
-      else math.max(1, (cur.map(_.sizeBytes).sum / (128L << 20)).toInt)
-    val sorted = base.withColumn("__curve", key)
-      .repartitionByRange(n, col("__curve"))
-      .sortWithinPartitions(col("__curve"))
-      .drop("__curve")
-    val newFiles = writeDataFiles(sorted, m, distributionOverride = Some("none"))
-    val hadLive = partitionStats(m).nonEmpty
-    commitSnapshot(m, newFiles, "replace", newFiles.size,
-      extraProperties = lineageMarker(m))
-    refreshPartitionStatsIfLive(hadLive)
-    this
   }
 
   /** Consolidate or re-cluster the current snapshot's manifests
@@ -3148,9 +3060,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     * rows they target. Evolution refuses loudly; materialize first.
     */
   private def requireNoPendingMor(op: String): Unit = {
-    val md = currentManifest()
-    require(md.deletePredicates.isEmpty && md.positionDeleteFiles.isEmpty &&
-        md.equalityDeletes.isEmpty,
+    require(!currentManifest().hasDeletes,
       s"$op with pending merge-on-read deletes: run materializeDeletes() first")
   }
 
@@ -3222,6 +3132,11 @@ class GraftTable(val spark: SparkSession, val location: String) {
 }
 
 object GraftTable {
+
+  /** Hidden column of a [[GraftTable.mergeApply]] update row holding the
+    * key `c` of the target row it replaces.
+    */
+  def targetKey(c: String): String = s"__graft_target_$c"
 
   /** The row-level multiset diff `before` → `after` as a changelog frame
     * (the columns of `before`, then `_change_type`), in ONE aggregate:

@@ -239,7 +239,11 @@ case class ManifestData(
     files: Seq[DataFile],
     deletePredicates: Seq[String],
     positionDeleteFiles: Seq[String],
-    equalityDeletes: Seq[EqualityDelete] = Nil)
+    equalityDeletes: Seq[EqualityDelete] = Nil) {
+  /** Any merge-on-read delete of any kind pending on `files`. */
+  def hasDeletes: Boolean =
+    deletePredicates.nonEmpty || positionDeleteFiles.nonEmpty || equalityDeletes.nonEmpty
+}
 
 /** One manifest referenced from a snapshot's manifest LIST, carrying the
   * aggregated column stats that let the scan planner skip the WHOLE

@@ -759,10 +759,93 @@ class GraftSqlSpec extends SparkSpec {
       s"expected the effSource-path context, got: ${e.getMessage}")
   }
 
-  // r7 regression: the MergeTail ON capture must not cross a WHEN
-  // boundary — a leading conditional DELETE followed by UNCONDITIONAL
-  // update+insert clauses previously let the simple-form regex swallow
-  // the DELETE into the ON string and die as a confusing parse error.
+  // the clause-list form builds its updates through the same target join
+  test("duplicate target keys in a clause-list MERGE get the reworded error") {
+    val g = freshSql(); registerSources(g)
+    g.sql("""CREATE TABLE card5 AS SELECT n_nationkey, n_name, n_regionkey FROM nation
+            |WHERE n_nationkey < 3""".stripMargin)
+    g.sql("INSERT INTO card5 SELECT n_nationkey, 'DUP' AS n_name, n_regionkey FROM nation WHERE n_nationkey = 1")
+    val e = intercept[IllegalArgumentException](g.sql(
+      """MERGE INTO card5 AS t USING (
+        |  SELECT n_nationkey, 'X' AS n_name FROM nation WHERE n_nationkey = 1
+        |) AS s ON n_nationkey = s.n_nationkey
+        |WHEN MATCHED AND t.n_name = 'DUP' THEN DELETE
+        |WHEN MATCHED THEN UPDATE SET n_name = s.n_name""".stripMargin))
+    assert(e.getMessage.contains("cardinality"))
+    assert(e.getMessage.contains("clause-list MERGE"),
+      s"expected the target-join context, got: ${e.getMessage}")
+  }
+
+  /** `nation`'s 25 rows as (key, name, region), key order. */
+  private def nationRows(g: GraftSql, table: String): Seq[(Long, String, Long)] =
+    g.sql(s"SELECT n_nationkey, n_name, n_regionkey FROM $table").collect().toSeq
+      .map(r => (r.get(0).toString.toLong, r.getString(1), r.get(2).toString.toLong))
+      .sortBy(r => (r._1, r._2))
+
+  // Iceberg MERGE semantics: an UPDATE may change the key, and the updated
+  // row replaces the target row it matched; an INSERT adds its row as
+  // built, whatever target row its key happens to equal
+  test("MERGE UPDATE SET that changes the key, with an INSERT clause, replaces the matched row") {
+    val g = freshSql(); registerSources(g)
+    g.sql("CREATE TABLE kc1 AS SELECT n_nationkey, n_name, n_regionkey FROM nation")
+    val before = nationRows(g, "kc1")
+    g.sql("""MERGE INTO kc1 AS t USING (
+            |  SELECT n_nationkey, n_name FROM nation WHERE n_nationkey = 1) AS s
+            |ON t.n_nationkey = s.n_nationkey
+            |WHEN MATCHED THEN UPDATE SET n_nationkey = s.n_nationkey + 1000, n_name = s.n_name
+            |WHEN NOT MATCHED THEN INSERT (n_nationkey, n_name) VALUES (s.n_nationkey, s.n_name)""".stripMargin)
+    val expected = before.map { case (k, n, r) => if (k == 1L) (1001L, n, r) else (k, n, r) }
+      .sortBy(r => (r._1, r._2))
+    assert(nationRows(g, "kc1") == expected)
+    assert(expected.size == 25)
+  }
+
+  test("update-only MERGE whose SET changes the key replaces the matched row") {
+    val g = freshSql(); registerSources(g)
+    g.sql("CREATE TABLE kc2 AS SELECT n_nationkey, n_name, n_regionkey FROM nation")
+    val before = nationRows(g, "kc2")
+    g.sql("""MERGE INTO kc2 AS t USING (
+            |  SELECT n_nationkey, n_name FROM nation WHERE n_nationkey = 1) AS s
+            |ON t.n_nationkey = s.n_nationkey
+            |WHEN MATCHED THEN UPDATE SET n_nationkey = s.n_nationkey + 1000, n_name = s.n_name""".stripMargin)
+    val expected = before.map { case (k, n, r) => if (k == 1L) (1001L, n, r) else (k, n, r) }
+      .sortBy(r => (r._1, r._2))
+    assert(nationRows(g, "kc2") == expected)
+  }
+
+  test("a MERGE INSERT whose built key equals a target key adds a row, never overwrites") {
+    val g = freshSql(); registerSources(g)
+    g.sql("CREATE TABLE kc3 AS SELECT n_nationkey, n_name, n_regionkey FROM nation")
+    val before = nationRows(g, "kc3")
+    g.sql("""MERGE INTO kc3 AS t USING (
+            |  SELECT 1002 AS n_nationkey, 'EXTRA' AS n_name, 4 AS n_regionkey) AS s
+            |ON t.n_nationkey = s.n_nationkey
+            |WHEN MATCHED THEN UPDATE SET n_name = s.n_name
+            |WHEN NOT MATCHED THEN INSERT (n_nationkey, n_name, n_regionkey)
+            |  VALUES (s.n_nationkey - 1000, s.n_name, s.n_regionkey)""".stripMargin)
+    val expected = (before :+ ((2L, "EXTRA", 4L))).sortBy(r => (r._1, r._2))
+    assert(nationRows(g, "kc3") == expected)
+    assert(expected.size == 26)
+  }
+
+  test("a target row matched twice under a key-changing SET is a cardinality violation") {
+    val g = freshSql(); registerSources(g)
+    g.sql("CREATE TABLE kc4 AS SELECT n_nationkey, n_name, n_regionkey FROM nation")
+    val before = nationRows(g, "kc4")
+    val e = intercept[IllegalArgumentException](g.sql(
+      """MERGE INTO kc4 AS t USING (
+        |  SELECT 1 AS n_nationkey, 'X' AS n_name UNION ALL SELECT 1, 'Y') AS s
+        |ON t.n_nationkey = s.n_nationkey
+        |WHEN MATCHED THEN UPDATE SET n_nationkey = s.n_nationkey + 1000, n_name = s.n_name
+        |WHEN NOT MATCHED THEN INSERT (n_nationkey, n_name) VALUES (s.n_nationkey, s.n_name)""".stripMargin))
+    assert(e.getMessage.contains("MERGE cardinality violation"))
+    assert(nationRows(g, "kc4") == before)
+  }
+
+  // r7 regression: the ON capture must not cross a WHEN boundary — a
+  // leading conditional DELETE followed by UNCONDITIONAL update+insert
+  // clauses once let the two-clause form's regex swallow the DELETE into
+  // the ON string and die as a confusing parse error.
   test("leading conditional DELETE + plain UPDATE/INSERT dispatches to the general form") {
     val g = freshSql(); registerSources(g)
     g.sql("CREATE TABLE lead1 AS SELECT n_nationkey, n_name, n_regionkey FROM nation")
