@@ -2415,17 +2415,22 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val probe = (updates.map(u =>
       u.select(targetKeyOf(u).zip(tk).map { case (c, k) => col(c).as(k) }: _*)).toSeq ++ delKeys)
       .reduceOption(_ unionByName _)
-    val touched = probe.filter(_ => md.files.nonEmpty).fold(Seq.empty[DataFile]) { p =>
-      val hit = touchedFilesWithCardinalityCheck(
-        ScanPlanner.scan(spark, m, md.files, None, rowMeta = true), p, keyCols)
-      md.files.filter(f => hit.contains(f.path))
-    }
+    val touched =
+      if (md.files.isEmpty) Nil
+      else probe.fold(Seq.empty[DataFile]) { p =>
+        val hit = touchedFilesWithCardinalityCheck(
+          ScanPlanner.scan(spark, m, md.files, None, rowMeta = true), p, keyCols)
+        md.files.filter(f => hit.contains(f.path))
+      }
     if (touched.isEmpty && inserts.forall(_.isEmpty)) return this
     rewrite(m, md, touched, "merge",
       inserts.map(_.select(m.schema.fieldNames.toSeq.map(col): _*))) { base =>
       val kept = delKeys.fold(base)(d => base.join(d,
         keyCols.zip(tk).map { case (c, k) => base(c) === d(k) }.reduce(_ && _), "left_anti"))
       updates.fold(kept) { u =>
+        // every column renamed once: a key projected twice keeps Spark from
+        // folding the projection into a top-k source (TakeOrderedAndProject)
+        // and costs a global sort
         val upd = u.select(u.columns.toSeq.map(c => col(c).as(s"__u_$c")): _*)
         val on = targetKeyOf(u).map(k => s"__u_$k")
         val matched = col(on.head).isNotNull
