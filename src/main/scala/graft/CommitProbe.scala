@@ -9,7 +9,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   * consumers (`IncrementalAggView.refresh`, `TableReplicator.sync`) — the
   * shared machinery under the t/mv families and the table-backed st gates
   * — with per-phase wall, Spark job and task counts and the generated
-  * classes each phase compiled ([[Compiles]]), over
+  * classes each phase compiled ([[Compiles]]) and the file-system calls
+  * it made ([[FsCalls]]; the probe routes `file:` paths through the
+  * counting file system), over
   * `SPARK_GRAFT_PROBE_REPS` reps (default 3; rep 1 runs cold). The phase
   * split tells which primitive carries the per-commit fixed cost the hot
   * gates pay 3-10× each. Runs on `local[SPARK_GRAFT_CPUS]` (default: the
@@ -18,6 +20,7 @@ import org.apache.spark.sql.graftbridge.Bridge
 object CommitProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sys.props("spark.hadoop.fs.file.impl") = classOf[CountingLocalFileSystem].getName
     val spark = GraftSession.harness()
     spark.read.parquet(s"$sfDir/region.parquet").count()
 
@@ -38,12 +41,12 @@ object CommitProbe {
       Bridge.drainListenerBus(spark)
       val (j0, k0) = (jobs, tasks)
       val t0 = System.nanoTime()
-      val (r, c) = Compiles.during(body)
+      val ((r, c), fs) = FsCalls.during(Compiles.during(body))
       val sec = (System.nanoTime() - t0) / 1e9
       // the bus is async: deliver the phase's events before counting them
       Bridge.drainListenerBus(spark)
       println(f"[commitprobe] rep$rep $name%-22s $sec%7.3f s  jobs=${jobs - j0}  " +
-        f"tasks=${tasks - k0}  compiles=${c.count}  compileMs=${c.ms}%.0f")
+        f"tasks=${tasks - k0}  compiles=${c.count}  compileMs=${c.ms}%.0f  fs: $fs")
       r
     }
 

@@ -1,6 +1,6 @@
 package graft.tables
 
-import graft.{Compiles, SparkSpec}
+import graft.{Compiles, FsCalls, SparkSpec}
 import graft.sources.{GraftSql, Tables}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
@@ -9,7 +9,8 @@ import org.apache.spark.sql.graftbridge.Bridge
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-/** Pinned Spark job and compile budgets for the changelog consumers.
+/** Pinned Spark job, compile and file-system call budgets for the commit
+  * primitives, the changelog consumers and copy-on-write DML.
   * Counts, never times: on a fixed small fixture (and the suite's fixed
   * `local[4]` session) the number of jobs an operation launches, and the
   * generated classes it has to compile once its plan shapes have run, are
@@ -36,17 +37,32 @@ class JobBudgetSpec extends SparkSpec {
     l
   }
 
-  /** Jobs and tasks `body` launches, every listener event delivered, and
-    * the classes it compiles.
+  /** Jobs and tasks `body` launches, every listener event delivered, the
+    * classes it compiles and the file-system calls it makes.
     */
   private def cost[A](body: => A): (A, Cost) = {
     listener
     Bridge.drainListenerBus(spark)
     val (j0, t0) = (jobs.get, tasks.get)
-    val (r, c) = Compiles.during(body)
+    val ((r, c), fs) = FsCalls.during(Compiles.during(body))
     Bridge.drainListenerBus(spark)
-    (r, Cost(jobs.get - j0, tasks.get - t0, c.count))
+    (r, Cost(jobs.get - j0, tasks.get - t0, c.count, fs))
   }
+
+  // File-system calls per operation, as `FsCalls.toString` (the suite's
+  // core-site.xml routes file: paths through the counting file system).
+  private val FsPins: Map[String, String] = Map(
+    "append" -> "create=5 mkdirs=6 rename=2 delete=3 list=4 getFileStatus=30 setPermission=0",
+    "upsert" -> "create=7 mkdirs=9 rename=4 delete=5 list=7 getFileStatus=48 setPermission=0",
+    "merge" -> "create=7 mkdirs=9 rename=4 delete=5 list=8 getFileStatus=51 setPermission=0",
+    "refresh" -> "create=7 mkdirs=9 rename=4 delete=5 list=24 getFileStatus=175 setPermission=0",
+    "sync" -> "create=7 mkdirs=9 rename=4 delete=5 list=21 getFileStatus=130 setPermission=0",
+    "sql DELETE" -> "create=7 mkdirs=8 rename=6 delete=3 list=11 getFileStatus=79 setPermission=0",
+    "sql MERGE SET * INSERT *" ->
+      "create=6 mkdirs=7 rename=4 delete=3 list=12 getFileStatus=107 setPermission=0")
+
+  private def assertFsPin(name: String, c: Cost): Unit =
+    assert(c.fs.toString == FsPins(name), s"$name file-system calls moved: ${c.fs}")
 
   /** A fixture whose refresh and sync have run every plan shape of a
     * steady cycle. Each of the first three cycles meets shapes for the
@@ -108,6 +124,8 @@ class JobBudgetSpec extends SparkSpec {
       s"refresh of a 3-group view ran $refresh; 32-task stages are back?")
     assert(sync.jobs == SyncJobs, s"sync job count moved: $sync")
     assert(sync.tasks <= SyncTaskCeiling, s"sync ran $sync")
+    assertFsPin("refresh", refresh)
+    assertFsPin("sync", sync)
     // one replica commit for all four source commits
     assert(GraftTable.load(spark, f.replicaLoc).meta.snapshots.size == snaps0 + 1)
   }
@@ -141,6 +159,9 @@ class JobBudgetSpec extends SparkSpec {
     assert(upsert.tasks <= UpsertTaskCeiling, s"upsert ran $upsert")
     assert(merge.jobs == MergeJobs, s"merge job count moved: $merge")
     assert(merge.tasks <= MergeTaskCeiling, s"merge ran $merge")
+    assertFsPin("append", append)
+    assertFsPin("upsert", upsert)
+    assertFsPin("merge", merge)
   }
 
   /** A three-file table (one create, two appends) registered in a fresh
@@ -214,6 +235,7 @@ class JobBudgetSpec extends SparkSpec {
       val (jobs, taskCeiling) = DmlPins(name)
       assert(c.jobs == jobs, s"$name job count moved: $c")
       assert(c.tasks <= taskCeiling, s"$name ran $c")
+      if (FsPins.contains(name)) assertFsPin(name, c)
     }
   }
 
@@ -256,5 +278,5 @@ class JobBudgetSpec extends SparkSpec {
 }
 
 object JobBudgetSpec {
-  private final case class Cost(jobs: Int, tasks: Int, compiles: Long)
+  private final case class Cost(jobs: Int, tasks: Int, compiles: Long, fs: FsCalls)
 }
