@@ -79,6 +79,13 @@ object GraftSession {
     // at ~13 MB.
     .config("spark.sql.codegen.cache.maxEntries", "512")
     .config("spark.sql.codegen.useIdInClassName", "false")
+    // Spark 4 keys its codegen cache by the session's artifact class
+    // loader, and every clone or newSession() gets its own, so a write
+    // planned on a private clone (a target-size write) recompiled every
+    // class of its plan each time. graft adds no session artifacts
+    // (jars, classes); sharing the one loader lets clones reuse
+    // the compiled classes.
+    .config("spark.sql.artifact.isolation.enabled", "false")
     // AQE stringifies the plan on every update; at 10^2+ scan branches an
     // unbounded plan string is a driver OOM. 4M chars bounds the DEBUG
     // artifact without touching planning itself.

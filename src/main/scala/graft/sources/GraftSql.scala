@@ -709,7 +709,14 @@ class GraftSql(val spark: SparkSession, warehouse: String,
         s"(SELECT 1 FROM $tgtView AS $tgtAlias WHERE $onQ) AND (${firstMatch(insertIdx)}) = $j"
     }).map(conform(name, _))
 
-    try t.mergeApply(updates, deleteKeys, inserts, keys)
+    // matched pairs no clause acts on (only possible when every MATCHED
+    // clause is conditional): their keys let the cardinality check refuse
+    // a duplicate target key that a condition splits
+    val idleKeys =
+      if (matchedIdx.isEmpty || matchedIdx.exists(_._1.cond.isEmpty)) None
+      else Some(spark.sql(s"SELECT ${keys.zip(hidden).map { case (k, h) =>
+        s"$tgtAlias.$k AS $h" }.mkString(", ")} FROM $pairs WHERE ($verdict) = -1"))
+    try t.mergeApply(updates, deleteKeys, inserts, keys, idleKeys)
     catch {
       case e: IllegalArgumentException
           if e.getMessage != null && e.getMessage.contains("cardinality") =>

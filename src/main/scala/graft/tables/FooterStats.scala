@@ -50,10 +50,26 @@ object FooterStats {
       org.apache.parquet.HadoopReadOptions.builder(c, new Path("/")).build())
 
   def read(conf: Configuration, path: String, schema: StructType): (Long, Map[String, ColStats]) = {
+    val (rows, _, stats) = readWith(conf, readOptions(conf), path, schema)
+    (rows, stats)
+  }
+
+  /** [[read]] plus the file's length in bytes, for a file a write task has
+    * just closed. The read options are built for this call: a write's own
+    * configuration must not enter the shared cache, which would keep it
+    * alive for the life of the JVM.
+    */
+  def readSized(conf: Configuration, path: String,
+      schema: StructType): (Long, Long, Map[String, ColStats]) =
+    readWith(conf, org.apache.parquet.HadoopReadOptions.builder(conf, new Path(path)).build(),
+      path, schema)
+
+  private def readWith(conf: Configuration, options: org.apache.parquet.ParquetReadOptions,
+      path: String, schema: StructType): (Long, Long, Map[String, ColStats]) = {
     val wanted: Map[String, DataType] =
       schema.fields.map(f => f.name -> f.dataType).toMap
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(path), conf), readOptions(conf))
+    val file = HadoopInputFile.fromPath(new Path(path), conf)
+    val reader = ParquetFileReader.open(file, options)
     try {
       var rows = 0L
       val accs = mutable.LinkedHashMap[String, Acc]()
@@ -71,7 +87,7 @@ object FooterStats {
       val stats = accs.collect { case (name, a) if a.ok =>
         name -> ColStats(a.min, a.max, a.nulls)
       }.toMap
-      (rows, stats)
+      (rows, file.getLength, stats)
     } finally reader.close()
   }
 

@@ -2,11 +2,12 @@ package graft.tables
 
 import graft.plans.DeclaredStats
 import graft.sources.Pq
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{ColumnStat, Histogram, HistogramBin}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.graftbridge.{Bridge, TaskWrite}
 import org.apache.spark.sql.types._
 import java.util.UUID
 
@@ -230,7 +231,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
   /** Can equality delete `e` possibly hit rows of data file `f`? False
     * only when some key column's ranges are PROVABLY disjoint — delete
     * key bounds were collected from the delete files' footers at commit
-    * ([[eqDeleteStats]]), file bounds come from its manifest entry (keyed
+    * ([[eqKeySchema]]), file bounds come from its manifest entry (keyed
     * physical). NULL keys match null-safely, so a column with NULLs on
     * both sides never prunes. Empty delete stats (pre-r8 metadata) always
     * apply. On a key-clustered table this turns a point-upsert's delete
@@ -249,20 +250,13 @@ class GraftTable(val spark: SparkSession, val location: String) {
       }
     }
 
-  /** Aggregated key-column bounds of just-written delete files (footer
-    * reads over the SMALL side — O(delete files) metadata, no data pass),
-    * stored on the [[EqualityDelete]] so reads can skip non-overlapping
-    * data files. Delete files carry the keys under their logical names.
+  /** The key columns whose footer bounds an equality delete's files
+    * report (under their logical names, as delete files carry them); the
+    * aggregated bounds are stored on the [[EqualityDelete]] so reads can
+    * skip non-overlapping data files.
     */
-  private def eqDeleteStats(delFiles: Seq[String], keyCols: Seq[String],
-      m: TableMeta): Map[String, ColStats] = {
-    val schema = StructType(
-      keyCols.flatMap(c => m.schema.fields.find(_.name == c)).toArray)
-    if (schema.isEmpty || delFiles.isEmpty) return Map.empty
-    val pseudo = delFiles.map(p =>
-      DataFile(p, 0, Map.empty, 0L, 0L, FooterStats.read(conf, p, schema)._2))
-    ManifestStats.aggregate(pseudo)
-  }
+  private def eqKeySchema(keyCols: Seq[String], m: TableMeta): StructType =
+    StructType(keyCols.flatMap(c => m.schema.fields.find(_.name == c)).toArray)
 
   /** Can position-delete file `pf` reference data file `path`? Checked
     * against the delete file's `file_path` column bounds (footer stats,
@@ -692,12 +686,11 @@ class GraftTable(val spark: SparkSession, val location: String) {
     */
   private def currentStats(m: TableMeta): Option[StatsPayload] = {
     def reachable(statsSnap: Long): Boolean = {
-      val rowPreserving = Set("replace", "rewrite-deletes")
       var cur = m.currentSnapshotId
       while (cur.isDefined) {
         if (cur.get == statsSnap) return true
         val s = m.snapshot(cur.get)
-        if (s.isEmpty || !rowPreserving.contains(s.get.operation)) return false
+        if (s.isEmpty || !GraftTable.RowPreservingOps(s.get.operation)) return false
         cur = s.get.parentId
       }
       false
@@ -806,7 +799,9 @@ class GraftTable(val spark: SparkSession, val location: String) {
     */
   def changesBetween(fromSnapshotId: Long, toSnapshotId: Long): DataFrame = {
     val m = meta
-    val parts = ancestryChain(m, fromSnapshotId, toSnapshotId)
+    // row-preserving commits carry no rows: they add no plan branch, so a
+    // range with maintenance in it plans like the same range without
+    val parts = rowChangingCommits(m, fromSnapshotId, toSnapshotId)
       .map(s => commitChanges(m, s))
     if (parts.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
@@ -827,6 +822,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
   def changelogView(fromSnapshotId: Long, toSnapshotId: Long): DataFrame = {
     val m = meta
     val parts = ancestryChain(m, fromSnapshotId, toSnapshotId).zipWithIndex
+      .filterNot { case (s, _) => GraftTable.RowPreservingOps(s.operation) }
       .map { case (s, i) =>
         commitChanges(m, s)
           // bound, not literal: a literal long lands in the generated
@@ -842,6 +838,15 @@ class GraftTable(val spark: SparkSession, val location: String) {
           StructField("_commit_snapshot_id", LongType))))
     else parts.reduce(_ unionAll _)
   }
+
+  /** The commits in `(from, to]` that can change rows, in commit order:
+    * all but row-preserving maintenance ([[GraftTable.RowPreservingOps]]),
+    * whose changelog is empty. Requires ancestry.
+    */
+  private[tables] def rowChangingCommits(m: TableMeta, fromSnapshotId: Long,
+      toSnapshotId: Long): List[Snapshot] =
+    ancestryChain(m, fromSnapshotId, toSnapshotId)
+      .filterNot(s => GraftTable.RowPreservingOps(s.operation))
 
   /** The commits in `(from, to]` in commit order; requires ancestry. */
   private def ancestryChain(m: TableMeta, fromSnapshotId: Long,
@@ -1424,12 +1429,40 @@ class GraftTable(val spark: SparkSession, val location: String) {
   // -------------------------------------------------------- write path
 
   /** Write `df` as new data files under a fresh commit dir, partitioned by
-    * the current spec, and build manifest entries with per-column min/max
-    * stats (one parallel stats pass over just the new files).
+    * the current spec, in ONE Spark action whose tasks create each file at
+    * its final name and return its manifest entry: path, size, row count,
+    * footer min/max/null counts and partition values ([[TaskWrite]]).
+    * Nothing is renamed, listed or re-read on the driver. Entries carry
+    * the data sequence number of the commit they land in against `m`
+    * (single writer: the caller commits against the same base meta).
     */
   private def writeDataFiles(df: DataFrame, m: TableMeta,
       distributionOverride: Option[String] = None): Seq[DataFile] = {
-    val commitDir = s"$location/data/${UUID.randomUUID().toString.take(8)}"
+    val w = layout(df, m, distributionOverride)
+    TaskWrite.write(w.frame, newDataDir(), w.partitionCols, w.options,
+      GraftTable.fileEntry(ColumnMapping.physicalSchema(m.schema), m.currentSpecId))
+      .data.map(_.copy(seq = nextSnapshotId(m)))
+  }
+
+  private def newDataDir(): String = s"$location/data/${UUID.randomUUID().toString.take(8)}"
+
+  /** A frame laid out for a data write: physical columns plus partition
+    * columns, distributed and sorted within tasks, on the session (or a
+    * private clone of it) carrying the write's settings.
+    */
+  private final class Layout(val frame: DataFrame, val partitionCols: Seq[String],
+      val options: Map[String, String])
+
+  /** `df` laid out the way the table writes data files. Columns of `df`
+    * outside the schema survive when they are row-lineage or
+    * [[TaskWrite]] riders. With `keyDistribution` (physical names) rows
+    * equal on those columns must meet in one task: the table's own
+    * distribution stays when its columns are a function of them
+    * (partition sources or sort columns among the keys), else a hash on
+    * them replaces it.
+    */
+  private def layout(df: DataFrame, m: TableMeta, distributionOverride: Option[String],
+      keyDistribution: Seq[String] = Nil): Layout = {
     val spec = m.currentSpec
     val gpCols = spec.fields.map(f => TableFormat.PartColPrefix + f.name)
     // write-default (the second half of the Iceberg v3 default model —
@@ -1452,14 +1485,16 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // files carry PHYSICAL names (schema evolution: renames never rewrite
     // data); partition transforms run after the projection — spec sources
     // are physical too. Materialized row-lineage riders (__gp_row_id /
-    // __gp_last_seq, present only on lineage-preserving rewrites) survive
-    // the projection: they're appended to the projection schema unmapped.
-    val lineageCols = Seq(RowLineage.MatRowId, RowLineage.MatSeq)
-      .filter(dfFilled.columns.contains)
+    // __gp_last_seq, present only on lineage-preserving rewrites) and a
+    // merge's routing riders survive the projection: they're appended to
+    // the projection schema unmapped.
+    val riders = Seq(RowLineage.MatRowId -> LongType, RowLineage.MatSeq -> LongType,
+        TaskWrite.RouteCol -> BooleanType, TaskWrite.TallyCol -> LongType)
+      .filter { case (c, _) => dfFilled.columns.contains(c) }
     val physDf =
-      if (lineageCols.isEmpty) ColumnMapping.toPhysical(m.schema, dfFilled)
+      if (riders.isEmpty) ColumnMapping.toPhysical(m.schema, dfFilled)
       else ColumnMapping.toPhysical(StructType(m.schema.fields ++
-        lineageCols.map(c => StructField(c, LongType))), dfFilled)
+        riders.map { case (c, t) => StructField(c, t) }), dfFilled)
     val physSchema = ColumnMapping.physicalSchema(m.schema)
     val out = spec.fields.foldLeft(physDf) { (d, f) =>
       d.withColumn(TableFormat.PartColPrefix + f.name,
@@ -1483,17 +1518,25 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val mode = distributionOverride.getOrElse(
       m.properties.getOrElse("write.distribution-mode",
         if (gpCols.nonEmpty) "hash" else if (sortCols.nonEmpty) "range" else "none"))
-    val distributed = mode match {
-      case "hash" if gpCols.nonEmpty => out.repartition(gpCols.map(col): _*)
-      case "hash" => out.repartition()
-      case "range" if sortCols.nonEmpty =>
-        out.repartitionByRange(sortCols.map(col): _*)
-      case _ => out
+    val keysTogether = mode match {
+      case "hash" if gpCols.nonEmpty => spec.fields.forall(f => keyDistribution.contains(f.source))
+      case "range" if sortCols.nonEmpty => sortCols.forall(keyDistribution.contains)
+      case _ => false
     }
-    // local sort to the declared order (within partition dirs when
-    // partitioned): every file gets tight min/max on the sort keys
+    val distributed =
+      if (keyDistribution.nonEmpty && !keysTogether) out.repartition(keyDistribution.map(col): _*)
+      else mode match {
+        case "hash" if gpCols.nonEmpty => out.repartition(gpCols.map(col): _*)
+        case "hash" => out.repartition()
+        case "range" if sortCols.nonEmpty =>
+          out.repartitionByRange(sortCols.map(col): _*)
+        case _ => out
+      }
+    // local sort to the declared order, within partition values when
+    // partitioned: every file gets tight min/max on the sort keys, and a
+    // task writes one file per partition value it holds
     val laidOut =
-      if (sortCols.isEmpty) distributed
+      if (gpCols.isEmpty && sortCols.isEmpty) distributed
       else distributed.sortWithinPartitions((gpCols ++ sortCols).map(col): _*)
     // INT64-micros timestamps (not INT96): footer min/max stats for
     // timestamp columns are only usable in this encoding. Target file
@@ -1525,29 +1568,22 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // IN predicates; manifests stay O(min/max))
     val bloomCols = m.properties.get(TableFormat.BloomColumns)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val writer = bloomCols.foldLeft(toWrite.write) { (w, c) =>
-      w.option(s"parquet.bloom.filter.enabled#$c", "true")
-    }
-    if (gpCols.isEmpty) writer.parquet(commitDir)
-    else writer.partitionBy(gpCols: _*).parquet(commitDir)
-    // stamp the data sequence number of the commit these files land in
-    // (single-writer: the caller commits against the same base meta)
-    collectFileEntries(commitDir, m, spec.specId).map(_.copy(seq = nextSnapshotId(m)))
+    new Layout(toWrite, gpCols,
+      bloomCols.map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap)
   }
 
-  /** Build DataFile entries (stats + partition values) for every parquet
-    * file under `dir`. Also used by in-place migration.
+  /** Build DataFile entries (stats + partition values) for every data file
+    * under `dir` that graft did NOT write: `addFiles` and in-place
+    * migration register an external writer's files, so they are listed
+    * and their footers read here, on the driver. graft's own writes get
+    * their entries from the tasks that wrote them ([[writeDataFiles]]).
     *
-    * Stats come from the parquet FOOTERS (per-row-group min/max/null
-    * counts the writer already produced) — an O(files) metadata read, not
-    * a second O(data) scan, and the reads run CONCURRENTLY (bounded
-    * thread pool): commit latency is O(files / parallelism), not a serial
-    * driver loop that stalls a 100k-file commit. At cluster scale each
-    * write task would emit its own file's entry (Iceberg's model); this
-    * is the single-node equivalent with identical results. Unmappable or
-    * untrusted stats (INT96 timestamps, non-ASCII binary bounds, unset
-    * null counts) are dropped per column — pruning is conservative by
-    * construction.
+    * Stats come from the FOOTERS (per-row-group min/max/null counts the
+    * writer already produced) — an O(files) metadata read, not a second
+    * O(data) scan, and the reads run CONCURRENTLY (bounded thread pool).
+    * Unmappable or untrusted stats (INT96 timestamps, non-ASCII binary
+    * bounds, unset null counts) are dropped per column — pruning is
+    * conservative by construction.
     */
   private[tables] def collectFileEntries(dir: String, m: TableMeta, specId: Int,
       format: String = "parquet"): Seq[DataFile] = {
@@ -1580,30 +1616,12 @@ class GraftTable(val spark: SparkSession, val location: String) {
         case "avro" =>
           (ExternalFooters.avroRowCount(conf, path), Map.empty[String, ColStats])
       }
-      DataFile(path, specId, partitionValuesFromPath(path), rows, size, stats,
+      DataFile(path, specId, GraftTable.partitionValuesFromPath(path), rows, size, stats,
         fileFormat = format)
     }.seq
   }
 
-  private def stripScheme(p: String): String =
-    if (p.startsWith("file:")) new Path(p).toUri.getPath else p
-
-  private def partitionValuesFromPath(path: String): Map[String, String] =
-    path.split('/').filter(_.startsWith(TableFormat.PartColPrefix)).flatMap { seg =>
-      seg.split("=", 2) match {
-        case Array(k, v) =>
-          Some(k.stripPrefix(TableFormat.PartColPrefix) -> unescapePathName(v))
-        case _ => None
-      }
-    }.toMap
-
-  /** Invert Hive path escaping (%XX) so stored partition values compare
-    * equal to unescaped filter literals (':', '%', '=', '#', … would
-    * otherwise break equality pruning and silently drop files). Delegates
-    * to the exact inverse of the escaping Spark applied on write.
-    */
-  private def unescapePathName(v: String): String =
-    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(v)
+  private def stripScheme(p: String): String = GraftTable.stripScheme(p)
 
   // --------------------------------------------------------------- DML
 
@@ -1638,14 +1656,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     requireAllParquet(md, "position deletes")
     val written = matchingLivePositions(m, md, cond) match {
       case None => Nil
-      case Some(posDf) =>
-        val delDir = s"$location/deletes/${UUID.randomUUID().toString.take(8)}"
-        posDf.write.parquet(delDir)
-        val fs = listParquet(delDir)
-        // writer knows the schema it just wrote: register it so the first
-        // read of these files skips the schema-inference Spark job
-        Pq.register(fs, posDf.schema)
-        fs
+      case Some(posDf) => writeDeleteFiles(posDf, "").map(_.path)
     }
     // nothing matched -> no commit at all (an empty delete-mor-pos
     // snapshot would break changelog consumers reading the file diff)
@@ -1677,13 +1688,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val written = matchingLivePositions(m, md, cond) match {
       case None => Nil
       case Some(posDf) =>
-        val delDir = s"$location/deletes/dv-${UUID.randomUUID().toString.take(8)}"
-        val dvDf = posDf.groupBy(col("file_path"))
-          .agg(GraftTable.bitmapAgg(col("pos")).as("dv"))
-        dvDf.write.parquet(delDir)
-        val fs = listParquet(delDir)
-        Pq.register(fs, dvDf.schema)
-        fs
+        writeDeleteFiles(posDf.groupBy(col("file_path"))
+          .agg(GraftTable.bitmapAgg(col("pos")).as("dv")), "dv-").map(_.path)
     }
     if (written.isEmpty) return this
     commitSnapshot(m, md.files, "delete-mor-pos", 0,
@@ -1743,18 +1749,30 @@ class GraftTable(val spark: SparkSession, val location: String) {
     require(keyCols.nonEmpty, "equality delete needs key columns")
     val m = meta
     val md = currentManifest(m)
-    val delDir = s"$location/deletes/${UUID.randomUUID().toString.take(8)}"
-    val keyDf = keys.select(keyColsStamped(keyCols, m.schema): _*).distinct()
-    keyDf.write.parquet(delDir)
-    val delFiles = listParquet(delDir)
-    Pq.register(delFiles, keyDf.schema)
+    val written = writeDeleteFiles(
+      keys.select(keyColsStamped(keyCols, m.schema): _*).distinct(), "",
+      eqKeySchema(keyCols, m))
     commitSnapshot(m, md.files, "delete-mor-eq", 0,
       deletePredicates = md.deletePredicates,
       positionDeleteFiles = md.positionDeleteFiles,
       equalityDeletes = md.equalityDeletes :+
-        EqualityDelete(keyCols, delFiles, nextSnapshotId(m),
-          eqDeleteStats(delFiles, keyCols, m)))
+        EqualityDelete(keyCols, written.map(_.path), nextSnapshotId(m),
+          ManifestStats.aggregate(written)))
     this
+  }
+
+  /** Write a delete-file frame under a fresh `deletes/<prefix>…` dir in
+    * one task-committed action, registering its schema so the first read
+    * skips schema inference. The entries carry footer bounds of the
+    * `statsSchema` columns.
+    */
+  private def writeDeleteFiles(df: DataFrame, prefix: String,
+      statsSchema: StructType = StructType(Nil)): Seq[DataFile] = {
+    val dir = s"$location/deletes/$prefix${UUID.randomUUID().toString.take(8)}"
+    val written = TaskWrite.write(df, dir, Nil, Map.empty,
+      GraftTable.fileEntry(statsSchema, 0)).data
+    Pq.register(written.map(_.path), df.schema)
+    written
   }
 
   /** Merge-on-read UPSERT (the streaming-CDC ingestion shape): ONE commit
@@ -1766,12 +1784,14 @@ class GraftTable(val spark: SparkSession, val location: String) {
     * [[materializeDeletes]]/[[compactDeleteFiles]] amortize the read-side
     * debt on maintenance schedule.
     */
-  def upsertMergeOnRead(source: DataFrame, keyCols: Seq[String]): GraftTable =
+  def upsertMergeOnRead(source: DataFrame, keyCols: Seq[String]): GraftTable = {
     // same statement, same loud failure in BOTH write modes: duplicate
     // source keys would corrupt silently here (two surviving rows under
-    // one equality delete) where the CoW merge errors. The check is a
-    // footer-count comparison over files already written — no extra pass.
-    mergeBatchWithRetry(source, None, keyCols, enforceUniqueKeys = true)
+    // one equality delete) where the CoW merge errors. The write's tasks
+    // count keys they meet twice — no extra pass.
+    applyBatch(source, keyCols, checkUnique = Some(source))
+    this
+  }
 
   /** The generic CDC batch apply: ONE commit carrying an equality delete on
     * `keyCols` for the upserted keys PLUS `deletedKeys` (rows that vanish
@@ -1782,6 +1802,11 @@ class GraftTable(val spark: SparkSession, val location: String) {
     * (e.g. [[graft.tables.IncrementalAggView]]'s base-snapshot watermark)
     * commits or fails WITH the data, so a crash between "apply" and
     * "advance cursor" cannot happen. O(|batch|) like [[upsertMergeOnRead]].
+    *
+    * ONE Spark action writes both the data files and the delete-key files
+    * (see [[applyBatch]]). `keysDistinct` is the caller's proof that no
+    * key occurs twice among upserts and deleted keys together; the write
+    * then keeps the frames' layout instead of co-locating equal keys.
     */
   def mergeBatch(upserts: DataFrame, deletedKeys: Option[DataFrame],
       keyCols: Seq[String],
@@ -1790,25 +1815,57 @@ class GraftTable(val spark: SparkSession, val location: String) {
     mergeBatchWithRetry(upserts, deletedKeys, keyCols, extraProperties,
       keysDistinct = keysDistinct)
 
-  /** [[mergeBatch]] with the maintenance-race rebase: a CDC upsert that
-    * loses the version CAS to a ROW-PRESERVING commit (compaction,
-    * clustering, delete materialization/folding — ops `replace` /
-    * `rewrite-deletes`) re-points its already-written delete-key and data
-    * files onto the winner's manifest and retries: the winner changed the
-    * table's files, not its rows, so the equality delete selects the same
-    * logical rows under a fresh sequence number. Anything that changed
-    * ROWS (appends, other upserts, CoW mutations) still refuses loudly —
-    * rebasing across those would reorder writes the caller believes are
-    * serial. This is what lets a streaming upsert sink and a maintenance
-    * schedule share a table (Iceberg's RowDelta retry under the same
-    * validation).
-    */
   private[tables] def mergeBatchWithRetry(upserts: DataFrame,
       deletedKeys: Option[DataFrame], keyCols: Seq[String],
       extraProperties: Map[String, String] = Map.empty,
       onAttempt: Int => Unit = _ => (),
-      enforceUniqueKeys: Boolean = false,
       keysDistinct: Boolean = false): GraftTable = {
+    val rows = deletedKeys.fold(upserts)(d =>
+      upserts.withColumn(TaskWrite.RouteCol, lit(true)).unionByName(
+        d.select(keyCols.map(col): _*).withColumn(TaskWrite.RouteCol, lit(false)),
+        allowMissingColumns = true))
+    applyBatch(rows, keyCols, extraProperties, onAttempt, keysDistinct = keysDistinct)
+    this
+  }
+
+  /** Apply one CDC batch — the merge-on-read merge behind
+    * [[upsertMergeOnRead]], [[mergeBatch]], [[IncrementalAggView.refresh]]
+    * and [[TableReplicator.sync]] — in ONE Spark action and one commit.
+    * `rows` holds the table's columns plus, optionally, the
+    * [[TaskWrite.RouteCol]] flag (true or absent: an upserted row, written
+    * to a data file and its key to the delete-key file; false: a deleted
+    * key, written to the key file only) and a long [[TaskWrite.TallyCol]]
+    * the tasks sum. The returned counts answer what callers used to probe
+    * for with separate jobs.
+    *
+    * Unless `keysDistinct`, each key must meet its duplicates in one
+    * task: rows are hash-distributed by key, or kept as they are when
+    * `keysColocated` proves it (a frame already partitioned by the key).
+    * The key file is then distinct, and with `checkUnique` (the frame to
+    * name the duplicate from) two upserted rows under one key fail as a
+    * MERGE cardinality violation, the diagnostic pass paid only then.
+    * With `commitEmpty = false` a batch of no rows commits nothing but
+    * `extraProperties`, and its empty files are deleted.
+    *
+    * The commit rebases over a ROW-PRESERVING winner (compaction,
+    * clustering, delete materialization/folding — ops `replace` /
+    * `rewrite-deletes`): it re-points its already-written delete-key and
+    * data files onto the winner's manifest and retries, since the winner
+    * changed the table's files, not its rows, so the equality delete
+    * selects the same logical rows under a fresh sequence number.
+    * Anything that changed ROWS (appends, other upserts, CoW mutations)
+    * still refuses loudly — rebasing across those would reorder writes
+    * the caller believes are serial. This is what lets a streaming upsert
+    * sink and a maintenance schedule share a table (Iceberg's RowDelta
+    * retry under the same validation).
+    */
+  private[tables] def applyBatch(rows: DataFrame, keyCols: Seq[String],
+      extraProperties: Map[String, String] = Map.empty,
+      onAttempt: Int => Unit = _ => (),
+      checkUnique: Option[DataFrame] = None,
+      keysDistinct: Boolean = false,
+      keysColocated: Boolean = false,
+      commitEmpty: Boolean = true): TaskWrite.Result[DataFile] = {
     require(keyCols.nonEmpty, "upsert needs key columns")
     // predicate deletes apply globally at read time — a carried-forward
     // predicate would silently drop upserted rows it matches, violating the
@@ -1816,49 +1873,39 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // older merge-on-read predicates. Materialize them first.
     if (currentManifest().deletePredicates.nonEmpty) { materializeDeletes(); () }
     val m = meta
-    val delDir = s"$location/deletes/${UUID.randomUUID().toString.take(8)}"
-    val upsertKeys = upserts.select(keyColsStamped(keyCols, m.schema): _*)
-    val keyUnion = deletedKeys.map(d => upsertKeys.unionByName(
-        d.select(keyColsStamped(keyCols, m.schema): _*)))
-      .getOrElse(upsertKeys)
-    // the dedup exchange is skipped when the caller PROVES the key union
-    // distinct (guide §2.4 "a distinct on data that is already unique"):
-    // IncrementalAggView's refresh splits one groupBy output into upserts
-    // and dead keys (disjoint, unique), and the streaming upsert sink
-    // reduces each batch to one row per key before calling in — a shuffle
-    // per commit for nothing. Semantics are unchanged either way: the
-    // equality delete drops a key's old rows once no matter how many
-    // times the key appears in the delete file.
-    val keyDf = if (keysDistinct) keyUnion else keyUnion.distinct()
-    // The delete-key write and the data write are independent actions on
-    // tiny frames whose cost is mostly fixed per-job latency; run them
-    // CONCURRENTLY. Neither changes session conf (writeDataFiles plans a
-    // target-size write on its own clone), so they cannot see each other's
-    // settings.
-    val keysWritten = scala.concurrent.Future {
-      keyDf.write.parquet(delDir)
-      val delFiles = listParquet(delDir)
-      Pq.register(delFiles, keyDf.schema)
-      (delFiles, eqDeleteStats(delFiles, keyCols, m))
-    }(GraftTable.commitWriteEc)
-    val written = writeDataFiles(upserts, m)
-    val (delFiles, delStats) =
-      scala.concurrent.Await.result(keysWritten, scala.concurrent.duration.Duration.Inf)
-    // Iceberg cardinality check at ZERO extra passes: the delete files
-    // hold the DISTINCT keys and the data files every row — both counts
-    // come from footers already on disk. Fewer distinct keys than rows
-    // means duplicates; only then pay the diagnostic pass for the message.
-    if (enforceUniqueKeys && deletedKeys.isEmpty) {
-      val distinctKeys =
-        delFiles.map(p => FooterStats.read(conf, p, StructType(Nil))._1).sum
-      if (distinctKeys < written.map(_.recordCount).sum)
-        requireUniqueMergeKeys(upserts, keyCols, "source")
+    val keyFields = keyCols.map(c => m.schema.fields.find(_.name == c))
+    val physKeys = keyCols.zip(keyFields).map { case (c, f) =>
+      f.map(ColumnMapping.physicalName).getOrElse(c) }
+    val dedup = !keysDistinct || checkUnique.isDefined
+    val w = layout(rows, m, None, if (dedup && !keysColocated) physKeys else Nil)
+    // delete-key files carry the LOGICAL key names (stamped with the
+    // schema's parquet field ids when present), as readers expect
+    val keyOut = TaskWrite.KeyOutput(
+      s"$location/deletes/${UUID.randomUUID().toString.take(8)}", physKeys,
+      keyCols.zip(keyFields).map { case (c, f) =>
+        StructField(c, NullType, nullable = true,
+          f.map(ColumnMapping.fileMetadata).getOrElse(Metadata.empty)) },
+      distinct = dedup, GraftTable.fileEntry(eqKeySchema(keyCols, m), 0))
+    val res = TaskWrite.write(w.frame, newDataDir(), w.partitionCols, w.options,
+      GraftTable.fileEntry(ColumnMapping.physicalSchema(m.schema), m.currentSpecId),
+      Some(keyOut))
+    if (res.duplicateKeys > 0) checkUnique.foreach(requireUniqueMergeKeys(_, keyCols, "source"))
+    if (!commitEmpty && res.dataRows == 0 && res.keyRows == 0) {
+      (res.data ++ res.keys).foreach { f =>
+        val p = new Path(f.path)
+        p.getFileSystem(conf).delete(p, false)
+      }
+      if (extraProperties.nonEmpty) setProperties(extraProperties)
+      return res
     }
-    val rowPreserving = Set("replace", "rewrite-deletes")
-    commitRebasing(m, onAttempt, s => rowPreserving(s.operation)) { b =>
+    val delFiles = res.keys.map(_.path)
+    Pq.register(delFiles, StructType(keyOut.fields.zip(physKeys).map { case (f, k) =>
+      f.copy(dataType = w.frame.schema(k).dataType) }))
+    val delStats = ManifestStats.aggregate(res.keys)
+    commitRebasing(m, onAttempt, s => GraftTable.RowPreservingOps(s.operation)) { b =>
       val md = currentManifest(b)
       val seq = nextSnapshotId(b)
-      val newFiles = written.map(_.copy(seq = seq))
+      val newFiles = res.data.map(_.copy(seq = seq))
       commitSnapshot(b, md.files ++ newFiles, "upsert-mor", newFiles.size,
         deletePredicates = md.deletePredicates,
         positionDeleteFiles = md.positionDeleteFiles,
@@ -1866,7 +1913,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
           EqualityDelete(keyCols, delFiles, seq, delStats),
         extraProperties = extraProperties)
     }
-    this
+    res
   }
 
   /** The optimistic commit loop of appends and merge-on-read merges
@@ -1907,17 +1954,6 @@ class GraftTable(val spark: SparkSession, val location: String) {
           m = fresh
       }
     }
-  }
-
-  private def listParquet(dir: String): Seq[String] = {
-    val fsys = MetaIO.fs(conf, dir)
-    val it = fsys.listFiles(new Path(dir), true)
-    val out = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val p = it.next().getPath.toString
-      if (p.endsWith(".parquet")) out += stripScheme(p)
-    }
-    out.result()
   }
 
   /** Rewrite the files containing rows hit by active merge-on-read deletes
@@ -1984,14 +2020,6 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val eqNeedsFold = md.equalityDeletes.groupBy(e => (e.cols, e.seq))
       .exists(_._2.flatMap(_.files).size > 1)
     if (!posNeedsFold && !eqNeedsFold) return this
-    def fold(paths: Seq[String]): Seq[String] = {
-      val dir = s"$location/deletes/${UUID.randomUUID().toString.take(8)}"
-      val df = Pq.readImmutable(spark, paths).distinct().coalesce(1)
-      df.write.parquet(dir)
-      val fs = listParquet(dir)
-      Pq.register(fs, df.schema)
-      fs
-    }
     // position deletes fold into ONE deletion-vector file regardless of
     // input kinds: maintenance upgrades the table to the bitmap layout,
     // restoring the one-DV-per-data-file read invariant. All-DV stacks
@@ -2003,7 +2031,6 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val newPos =
       if (!posNeedsFold) md.positionDeleteFiles
       else {
-        val dir = s"$location/deletes/dv-${UUID.randomUUID().toString.take(8)}"
         val allDv = md.positionDeleteFiles.forall(GraftTable.isDvFile)
         val folded =
           if (allDv)
@@ -2014,18 +2041,16 @@ class GraftTable(val spark: SparkSession, val location: String) {
             posDeleteRows(md.positionDeleteFiles)
               .groupBy(col("file_path"))
               .agg(GraftTable.bitmapAgg(col("pos")).as("dv"))
-        folded.coalesce(1).write.parquet(dir)
-        val fs = listParquet(dir)
-        Pq.register(fs, folded.schema)
-        fs
+        writeDeleteFiles(folded.coalesce(1), "dv-").map(_.path)
       }
     val newEq = md.equalityDeletes.groupBy(e => (e.cols, e.seq)).map { case ((cols, seq), es) =>
       val files = es.flatMap(_.files)
       if (files.size > 1) {
-        val folded = fold(files)
         // folded file = union of the originals: recompute bounds so the
         // read-side overlap pruning survives compaction
-        EqualityDelete(cols, folded, seq, eqDeleteStats(folded, cols, m))
+        val folded = writeDeleteFiles(
+          Pq.readImmutable(spark, files).distinct().coalesce(1), "", eqKeySchema(cols, m))
+        EqualityDelete(cols, folded.map(_.path), seq, ManifestStats.aggregate(folded))
       } else EqualityDelete(cols, files, seq, es.head.stats)
     }.toSeq
     commitSnapshot(m, md.files, "rewrite-deletes", 0,
@@ -2333,9 +2358,10 @@ class GraftTable(val spark: SparkSession, val location: String) {
 
   /** Iceberg MERGE cardinality rule, evaluated INSIDE the probe join that
     * finds touched files (one pass, no separate source scan): fail when a
-    * TARGET ROW matches more than one probe row. The probe holds one
-    * target key per update row and one per distinct deleted key, in the
-    * [[GraftTable.targetKey]] columns. Returns the set of file paths
+    * TARGET ROW an action names matches more than one probe row. The probe
+    * holds one target key per update row and one per distinct deleted key
+    * (`__act` 1), plus one per matched pair no clause acts on (`__act` 0),
+    * in the [[GraftTable.targetKey]] columns. Returns the set of file paths
     * holding matched rows. Matching Iceberg exactly: duplicate source
     * keys that match NO target row are legal (they insert).
     */
@@ -2357,8 +2383,11 @@ class GraftTable(val spark: SparkSession, val location: String) {
       .join(probe, keyCols.map(c => col(c) === col(GraftTable.targetKey(c))).reduce(_ && _),
         "inner")
       .groupBy(col("__fp"), col("__pos"))
-      .agg(count(lit(1)).as("__n"), first(concat_ws(",",
+      .agg(sum(col("__act")).as("__a"), count(lit(1)).as("__n"), first(concat_ws(",",
         keyCols.map(c => col(GraftTable.targetKey(c)).cast("string")): _*)).as("__k"))
+      // rows some action names; one named by an action and also matched
+      // by another pair (acting or idle) is a violation
+      .filter(col("__a") > 0)
     val byFile = perRow.groupBy(col("__fp")).agg(
       max(col("__n")).as("__mx"),
       first(when(col("__n") > 1, col("__k")), ignoreNulls = true).as("__dup"))
@@ -2398,11 +2427,18 @@ class GraftTable(val spark: SparkSession, val location: String) {
     * Matched rows named by neither survive untouched, and only files
     * holding an updated or deleted key are rewritten. The Iceberg
     * cardinality check rides the touched-files probe join: a target row
-    * matched by more than one update or delete fails loudly. A MERGE that
-    * touches no file and inserts nothing commits nothing.
+    * matched by more than one update or delete fails loudly.
+    *  - `idleKeys` holds one row per matched (target, source) pair that
+    *    no clause acts on, as [[GraftTable.targetKey]] columns. Rows are
+    *    named by key, so if a key that an update or delete names also has
+    *    such a pair — a duplicate target key whose rows a clause
+    *    condition tells apart — the MERGE cannot act on only some of them
+    *    and fails the same check instead of acting on all.
+    * A MERGE that touches no file and inserts nothing commits nothing.
     */
   def mergeApply(updates: Option[DataFrame], deleteKeys: Option[DataFrame],
-      inserts: Option[DataFrame], keyCols: Seq[String]): GraftTable = {
+      inserts: Option[DataFrame], keyCols: Seq[String],
+      idleKeys: Option[DataFrame] = None): GraftTable = {
     ensureMaterialized()
     val m = meta
     val md = currentManifest(m)
@@ -2412,8 +2448,12 @@ class GraftTable(val spark: SparkSession, val location: String) {
       keyCols.zip(tk).map { case (c, k) => if (u.columns.contains(k)) k else c }
     val delKeys = deleteKeys.map(d =>
       d.select(keyCols.zip(tk).map { case (c, k) => col(c).as(k) }: _*).distinct())
-    val probe = (updates.map(u =>
+    // each probe row is one action on a target key (__act 1), or a matched
+    // pair no clause acts on (__act 0)
+    val acting = (updates.map(u =>
       u.select(targetKeyOf(u).zip(tk).map { case (c, k) => col(c).as(k) }: _*)).toSeq ++ delKeys)
+    val probe = (acting.map(_.withColumn("__act", lit(1L))) ++
+        idleKeys.filter(_ => acting.nonEmpty).map(_.select(tk.map(col) :+ lit(0L).as("__act"): _*)))
       .reduceOption(_ unionByName _)
     val touched =
       if (md.files.isEmpty) Nil
@@ -3268,20 +3308,53 @@ object GraftTable {
             t
           })))
 
-  /** Small daemon pool for overlapping a commit's independent write
-    * actions (merge delete-key file vs data files). Spark job submission
-    * is thread-safe and no write changes session conf, so the overlap is
-    * safe on every table; the pool is tiny because each task is one
-    * blocking Spark action, not compute.
+  /** Commit operations that change a table's files but not its rows
+    * (compaction and clustering, delete materialization and folding).
     */
-  private[tables] lazy val commitWriteEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(4,
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-commit-write")
-          t.setDaemon(true)
-          t
-        }))
+  private[tables] val RowPreservingOps: Set[String] = Set("replace", "rewrite-deletes")
+
+  /** A local path without its `file:` scheme, the form manifests store. */
+  private[tables] def stripScheme(p: String): String =
+    if (p.startsWith("file:")) new Path(p).toUri.getPath else p
+
+  private[tables] def partitionValuesFromPath(path: String): Map[String, String] =
+    path.split('/').filter(_.startsWith(TableFormat.PartColPrefix)).flatMap { seg =>
+      seg.split("=", 2) match {
+        case Array(k, v) =>
+          Some(k.stripPrefix(TableFormat.PartColPrefix) -> unescapePathName(v))
+        case _ => None
+      }
+    }.toMap
+
+  /** Invert Hive path escaping (%XX) so stored partition values compare
+    * equal to unescaped filter literals (':', '%', '=', '#', … would
+    * otherwise break equality pruning and silently drop files). Delegates
+    * to the exact inverse of the escaping Spark applied on write.
+    */
+  private def unescapePathName(v: String): String =
+    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(v)
+
+  /** Write `df` as parquet files under `dir`, replacing whatever it held,
+    * in one task-committed action ([[TaskWrite]]); returns their paths.
+    * For interop artifacts that need no manifest entry.
+    */
+  private[tables] def writeParquetFiles(df: DataFrame, dir: String): Seq[String] = {
+    val path = new Path(dir)
+    path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(path, true)
+    TaskWrite.write(df, dir, Nil, Map.empty, (_: Configuration, p: String) => stripScheme(p)).data
+  }
+
+  /** The manifest entry of a parquet file a write task has just closed,
+    * built on that task: `physSchema` names the columns whose footer
+    * stats are kept. The same entry [[GraftTable.collectFileEntries]]
+    * builds from a listing.
+    */
+  private[tables] def fileEntry(physSchema: StructType,
+      specId: Int): (Configuration, String) => DataFile = (conf, written) => {
+    val (rows, size, stats) = FooterStats.readSized(conf, written, physSchema)
+    val path = stripScheme(written)
+    DataFile(path, specId, partitionValuesFromPath(path), rows, size, stats)
+  }
 
   /** CTAS (reference "Import: CTAS"): create a table from a query result. */
   def createAs(spark: SparkSession, location: String, df: DataFrame,

@@ -591,14 +591,10 @@ object IcebergExport {
     }
     val conf = spark.sparkContext.hadoopConfiguration
     val tmpDir = outPath + ".tmpdir"
-    spark.createDataFrame(
+    val part = new org.apache.hadoop.fs.Path(GraftTable.writeParquetFiles(spark.createDataFrame(
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-      schema).coalesce(1).write.mode("overwrite").parquet(tmpDir)
+      schema).coalesce(1), tmpDir).head)
     val fs = MetaIO.fs(conf, tmpDir)
-    val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmpDir))
-      .map(_.getPath)
-      .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"no parquet written under $tmpDir"))
     val out = new org.apache.hadoop.fs.Path(outPath)
     if (fs.exists(out)) fs.delete(out, false)
     fs.rename(part, out)

@@ -485,11 +485,10 @@ object IcebergManifests {
           val tag = java.lang.Integer.toHexString(
             scala.util.hashing.MurmurHash3.stringHash(d))
           val dir = s"$outDir/deletes-dv-$tag"
-          t.spark.read.parquet(d)
+          GraftTable.writeParquetFiles(t.spark.read.parquet(d)
             .select(col("file_path"),
               explode(graft.functions.F.bitmapPositions(col("dv"))).as("pos"))
-            .coalesce(1).write.mode("overwrite").parquet(dir)
-          listParquetFiles(conf, dir)
+            .coalesce(1), dir)
         })
       }
     }
@@ -1004,9 +1003,7 @@ object IcebergManifests {
     val tag = java.lang.Integer.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(manifestPath))
     val dir = s"$targetLocation/deletes/dv-imp-$tag"
-    rows.toDF("file_path", "dv").coalesce(1)
-      .write.mode("overwrite").parquet(dir)
-    listParquetFiles(conf, dir)
+    GraftTable.writeParquetFiles(rows.toDF("file_path", "dv").coalesce(1), dir)
   }
 
   /** Spark-canonical rendering of a possibly-schemeless path ("file:/abs"
@@ -1015,18 +1012,6 @@ object IcebergManifests {
     */
   private[tables] def canonPath(p: String): String =
     graft.functions.PathCanonUtil.canonString(p)
-
-  /** Recursive .parquet listing with graft's local-path convention. */
-  private[tables] def listParquetFiles(conf: Configuration, dir: String): Seq[String] = {
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-    val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
-    val out = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val p = it.next().getPath.toString
-      if (p.endsWith(".parquet")) out += stripLocal(p)
-    }
-    out.result()
-  }
 
   /** Copy foreign position-delete files with `file_path` rewritten to
     * Spark's canonical rendering ("file:/abs/path" for local files): the
@@ -1041,10 +1026,8 @@ object IcebergManifests {
     val tag = java.lang.Integer.toHexString(
       scala.util.hashing.MurmurHash3.orderedHash(files))
     val dir = s"$targetLocation/deletes/imp-$tag"
-    spark.read.parquet(files: _*)
-      .select(graft.functions.F.canonPath(col("file_path")).as("file_path"), col("pos"))
-      .write.mode("overwrite").parquet(dir)
-    listParquetFiles(spark.sparkContext.hadoopConfiguration, dir)
+    GraftTable.writeParquetFiles(spark.read.parquet(files: _*)
+      .select(graft.functions.F.canonPath(col("file_path")).as("file_path"), col("pos")), dir)
   }
 
   /** Target-dir name for a translated Avro artifact: basename plus a

@@ -2,6 +2,7 @@ package graft.tables
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.TaskWrite
 import org.apache.spark.sql.types.DecimalType
 
 /** Incremental materialized-view maintenance over a [[GraftTable]]: a
@@ -14,13 +15,11 @@ import org.apache.spark.sql.types.DecimalType
   * Refresh cost is O(changed rows + touched groups), never O(base table):
   * the changelog delta aggregates to per-group (count, sum) adjustments
   * with sign +1 for 'insert' rows and -1 for 'delete' rows; the current
-  * values of ONLY the touched groups join in (delta is aggregated and
-  * small, so it broadcasts both into the semi-join that restricts the view
-  * scan and into the outer join that applies it); groups whose count
-  * reaches zero are deleted. The apply is ONE [[GraftTable.mergeBatch]]
-  * commit whose equality delete covers both replaced and vanished groups,
-  * and the progress cursor (`graft.mv.base-snapshot`) rides the same
-  * metadata version — refresh is exactly-once by construction: either the
+  * values of the touched groups join in through one outer join from the
+  * delta to the view; groups whose count reaches zero are deleted. The apply is ONE Spark action and ONE
+  * merge-on-read commit whose equality delete covers both replaced and
+  * vanished groups, and the progress cursor (`graft.mv.base-snapshot`)
+  * rides the same metadata version — refresh is exactly-once by construction: either the
   * delta and the cursor both land or neither does.
   *
   * Measures are summed as DECIMAL(28,6) of the source column: decimal
@@ -30,10 +29,9 @@ import org.apache.spark.sql.types.DecimalType
   * (the count column is the NULL-discriminating signal).
   *
   * 100 TB posture: the view is an aggregate, orders of magnitude smaller
-  * than the base; cluster it by the group columns ([[GraftTable.cluster]])
-  * and the per-refresh view scan prunes to the files whose key ranges
-  * intersect the touched groups. The changelog side reads only the files
-  * each commit added/removed (manifest diff), never the base table.
+  * than the base, and each refresh reads it once. The changelog side
+  * reads only the files each commit added/removed (manifest diff), never
+  * the base table.
   */
 final class IncrementalAggView private (
     val spark: SparkSession, val table: GraftTable) {
@@ -125,86 +123,76 @@ final class IncrementalAggView private (
 
   /** Fold the base table's commits since the last refresh into the view.
     * Returns the number of changelog rows processed (0 = already current,
-    * no commit made). If the cursor's snapshot has EXPIRED off the base
-    * table (or a rollback moved the head off its ancestry), the changelog
-    * is unreachable — refresh self-heals with a FULL recompute instead of
+    * no data commit made). The delta aggregate, the touched view groups
+    * and the apply run as ONE Spark action that writes the new group rows
+    * and the delete keys together and reports the changelog row count
+    * ([[GraftTable.applyBatch]]); nothing is cached or probed first. A
+    * range of maintenance commits only advances the cursor, no job run.
+    * If the cursor's snapshot has EXPIRED off the base table (or a
+    * rollback moved the head off its ancestry), the changelog is
+    * unreachable — refresh self-heals with a FULL recompute instead of
     * failing forever: the recompute is idempotent, so the overwrite +
     * cursor (one atomic commit) is safe even if a crash forces a redo.
     */
   def refresh(): Long = {
     val base = GraftTable.load(spark, baseLocation)
     reconcileSchema(base)
-    val cur = base.meta.currentSnapshotId
+    val bm = base.meta
+    val cur = bm.currentSnapshotId
       .getOrElse(throw new IllegalStateException("base table has no snapshot"))
     val last = baseSnapshot
     if (cur == last) return 0L
 
+    val cursor = Map(BaseSnapProp -> cur.toString)
     val gcols = groupCols
     val scols = sumCols
-    val changes0 = (try base.changesBetween(last, cur)
-      catch {
+    val changes0 = (try {
+        // commits happened but none can carry rows (maintenance): advance
+        // the cursor so the next refresh's changelog walk starts here
+        if (base.rowChangingCommits(bm, last, cur).isEmpty) {
+          table.setProperties(cursor)
+          return 0L
+        }
+        base.changesBetween(last, cur)
+      } catch {
         case _: IllegalArgumentException => return fullRefresh(base, cur)
       })
     val changes = filterSql.map(f => changes0.filter(expr(f))).getOrElse(changes0)
       .select((gcols ++ scols).map(col) :+ col("_change_type"): _*)
     // ONE pass over the changelog (r21, guide §1.2/§2.3): aggregate it
-    // straight to the per-group delta — carrying a gross per-group row
-    // count so nChanges falls out of the (tiny, cached) delta instead of
-    // a separate count() pass that previously forced caching the whole
-    // changelog. Everything downstream reuses the O(touched groups) delta.
+    // straight to the per-group delta, carrying a gross per-group row
+    // count that the apply sums into nChanges. Everything downstream
+    // reuses the O(touched groups) delta.
     val sign = when(col("_change_type") === "insert", lit(1L)).otherwise(lit(-1L))
     val delta = changes.groupBy(gcols.map(col): _*).agg(
       count(lit(1)).as(GrossCnt),
       sum(sign).as(DeltaCnt) +:
         scols.map(c => sum(sign.cast(SumType) *
           coalesce(col(c).cast(SumType), lit(0).cast(SumType))).as(deltaSum(c))): _*)
-      .cache()
-    try {
-      val nChanges = delta.agg(coalesce(sum(col(GrossCnt)), lit(0L))).head().getLong(0)
-      if (nChanges == 0) {
-        // commits happened but none carried rows (maintenance) — advance
-        // the cursor so the next refresh's changelog walk starts here
-        table.setProperties(Map(BaseSnapProp -> cur.toString))
-        return 0L
-      }
 
-      // null-safe joins throughout: a NULL group key is a real group (the
-      // upsert's equality delete is null-safe too — a plain `=` here would
-      // drop the old NULL-group row without folding it in)
-      val view = table.toDF()
-      val deltaKeys = delta.select(gcols.map(col): _*)
-      val touched = view.join(broadcast(deltaKeys),
-        gcols.map(c => view(c) <=> deltaKeys(c)).reduce(_ && _), "left_semi")
-      val merged = delta.join(touched,
-        gcols.map(c => delta(c) <=> touched(c)).reduce(_ && _), "left_outer")
-      val newCnt = coalesce(touched(CntCol), lit(0L)) + delta(DeltaCnt)
-      val newSums = scols.map(c =>
-        (coalesce(touched(sumCol(c)), lit(0).cast(SumType)).cast(SumType) +
-          delta(deltaSum(c))).cast(SumType).as(sumCol(c)))
-      // next is O(touched groups); cache it so mergeBatch's two consumers
-      // (the delete-key write and the data write) don't each recompute the
-      // semi-join + outer-join against the view
-      val next = merged.select(
-        (gcols.map(c => delta(c).as(c)) :+ newCnt.as(CntCol)) ++ newSums: _*)
-        .cache()
-      try {
-        val upserts = next.filter(col(CntCol) > 0)
-        val dead = next.filter(col(CntCol) <= 0).select(gcols.map(col): _*)
-        // upserts and dead split ONE groupBy output on disjoint cnt
-        // predicates: their key union is distinct by construction, so the
-        // merge skips its dedup exchange (one shuffle per refresh saved)
-        table.mergeBatch(upserts, Some(dead), gcols,
-          extraProperties = Map(BaseSnapProp -> cur.toString),
-          keysDistinct = true)
-      } finally {
-        next.unpersist()
-        ()
-      }
-      nChanges
-    } finally {
-      delta.unpersist()
-      ()
-    }
+    // each delta group meets its current view row (one per group) in an
+    // outer join that reads `delta` once; Spark picks the join strategy
+    // from the two sides' sizes. Null-safe throughout: a NULL group key is
+    // a real group (the upsert's equality delete is null-safe too — a
+    // plain `=` here would drop the old NULL-group row without folding it in)
+    val view = table.toDF()
+    val merged = delta.join(view,
+      gcols.map(c => delta(c) <=> view(c)).reduce(_ && _), "left_outer")
+    val newCnt = coalesce(view(CntCol), lit(0L)) + delta(DeltaCnt)
+    val newSums = scols.map(c =>
+      (coalesce(view(sumCol(c)), lit(0).cast(SumType)).cast(SumType) +
+        delta(deltaSum(c))).cast(SumType).as(sumCol(c)))
+    // one row per touched group, applied in ONE action: a group still
+    // counting rows upserts its new aggregate, an emptied group's key is
+    // deleted. The keys are one groupBy's output, distinct by
+    // construction, so the apply keeps this layout (no key exchange), and
+    // the gross changelog count rides along for the tasks to sum.
+    val rows = merged.select(
+      (gcols.map(c => delta(c).as(c)) :+ newCnt.as(CntCol)) ++ newSums ++ Seq(
+        (newCnt > 0).as(TaskWrite.RouteCol), delta(GrossCnt).as(TaskWrite.TallyCol)): _*)
+    // no changelog rows at all: nothing to apply, the cursor still moves
+    table.applyBatch(rows, gcols, extraProperties = cursor, keysDistinct = true,
+      commitEmpty = false).tally
   }
 
   /** Recompute the aggregate from the base's current state and replace

@@ -3,6 +3,7 @@ package graft.tables
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.TaskWrite
 
 /** Changelog-driven table replication: keep a replica GraftTable in sync
   * with a source table by replaying the source's row-level changelog — the
@@ -13,10 +14,10 @@ import org.apache.spark.sql.functions._
   * head ([[GraftTable.changelogView]], each row tagged with its commit's
   * `_change_ordinal`) and folds it to the NET change — Iceberg's
   * `net_changes`: for every key, only the rows of the last commit that
-  * touched it. Those rows go to the replica as ONE
-  * [[GraftTable.mergeBatch]]: 'insert' rows upsert, 'delete' rows become
-  * equality-delete keys, and the head cursor advances in the same
-  * metadata version — a crash replays the whole range, never
+  * touched it. Those rows go to the replica in ONE Spark action and ONE
+  * merge-on-read commit ([[GraftTable.applyBatch]]): 'insert' rows upsert,
+  * 'delete' rows become equality-delete keys, and the head cursor advances
+  * in the same metadata version — a crash replays the whole range, never
   * double-applies (exactly-once per sync). The fold is exact, not an
   * approximation of commit-by-commit replay: each replayed commit drops
   * a touched key's old rows before adding its own, so after replay a key
@@ -168,7 +169,12 @@ object TableReplicator {
   /** Apply all source commits since the replica's cursor. Returns the
     * number of source commits applied (0 = already in sync), or
     * [[FullResync]] (-1) when the cursor was unreachable and the replica
-    * was rebuilt from the source's current state instead.
+    * was rebuilt from the source's current state instead. The net change
+    * of the range is applied by ONE Spark action and one replica commit:
+    * the action writes the upserted rows and the delete keys together and
+    * reports whether the range changed anything, so nothing is cached or
+    * probed first; a range that only holds maintenance commits advances
+    * the cursor without a job.
     */
   def sync(spark: SparkSession, replicaLocation: String): Int =
     syncImpl(spark, GraftTable.load(spark, replicaLocation))
@@ -281,14 +287,18 @@ object TableReplicator {
     // per key, keep the rows of the highest `_change_ordinal` — its
     // inserts upsert, its deletes become equality-delete keys.
     val cursor = Map(SrcSnapProp -> head.toString)
-    val rowPreserving = Set("replace", "rewrite-deletes")
-    val dataCommits = chain.filterNot(s => rowPreserving.contains(s.operation))
+    val dataCommits = chain.filterNot(s => GraftTable.RowPreservingOps(s.operation))
     // 'replace'/'rewrite-deletes' contribute an EMPTY changelog by
     // construction, so a maintenance-only chain just advances the cursor.
     if (dataCommits.isEmpty) {
       replica.setProperties(cursor)
       return chain.size
     }
+    // ONE Spark action applies the net change: its inserts go to data
+    // files and their keys to the delete-key file, its deletes to the key
+    // file only. A range whose net change is empty (pure equality deletes
+    // of absent keys, an update that changed nothing) writes no rows, and
+    // the apply then commits the cursor alone.
     val lastTouch = max(col("_change_ordinal"))
       .over(Window.partitionBy(keyCols.map(col): _*))
     val net = source.changelogView(last, head)
@@ -298,31 +308,11 @@ object TableReplicator {
       // range)` as an extra filter, whose generated code grows with the
       // range length
       .filter(col("_change_ordinal") >= col("__last_touch"))
-      .drop("__last_touch", "_change_ordinal", "_commit_snapshot_id")
-      .cache()
-    try {
-      // Emptiness is decided from COMMIT METADATA where provable: a
-      // file-record total that MOVED vs the parent proves that commit's
-      // changelog nonempty (appends add records, CoW mutations change the
-      // removed-vs-added cardinality, MOR upserts add their new files'
-      // records). Only a chain of unchanged totals (pure equality
-      // deletes, equal-count CoW updates) pays the one isEmpty probe.
-      val provablyNonEmpty = dataCommits.exists { s =>
-        s.totalRecords != s.parentId.flatMap(sm.snapshot).map(_.totalRecords).getOrElse(0L)
-      }
-      if (!provablyNonEmpty && net.isEmpty) replica.setProperties(cursor)
-      else {
-        val inserts = net.filter(col("_change_type") === "insert")
-          .drop("_change_type")
-        val deletedKeys = net.filter(col("_change_type") === "delete")
-          .select(keyCols.map(col): _*)
-        replica.mergeBatch(inserts, Some(deletedKeys), keyCols,
-          extraProperties = cursor)
-      }
-    } finally {
-      net.unpersist()
-      ()
-    }
+      .withColumn(TaskWrite.RouteCol, col("_change_type") === "insert")
+      .drop("__last_touch", "_change_ordinal", "_commit_snapshot_id", "_change_type")
+    // the window partitions rows by key: equal keys already share a task
+    replica.applyBatch(net, keyCols, extraProperties = cursor, keysColocated = true,
+      commitEmpty = false)
     chain.size
   }
 }

@@ -776,6 +776,41 @@ class GraftSqlSpec extends SparkSpec {
       s"expected the target-join context, got: ${e.getMessage}")
   }
 
+  // rows are named by key: a clause condition that tells apart two target
+  // rows sharing a key cannot act on one of them only, so it must refuse
+  // (it used to update or delete both rows silently)
+  for ((form, action) <- Seq("UPDATE" -> "UPDATE SET n_name = s.n_name", "DELETE" -> "DELETE"))
+    test(s"a conditional MATCHED $form that splits duplicate target keys is a cardinality violation") {
+      val g = freshSql(); registerSources(g)
+      g.sql("""CREATE TABLE card6 AS SELECT n_nationkey, n_name, n_regionkey FROM nation
+              |WHERE n_nationkey < 3""".stripMargin)
+      g.sql("INSERT INTO card6 SELECT n_nationkey, 'DUP' AS n_name, n_regionkey FROM nation WHERE n_nationkey = 1")
+      val before = g.sql("SELECT n_nationkey, n_name FROM card6").collect().map(_.toString).sorted.toSeq
+      val e = intercept[IllegalArgumentException](g.sql(
+        s"""MERGE INTO card6 AS t USING (
+           |  SELECT n_nationkey, 'X' AS n_name FROM nation WHERE n_nationkey = 1
+           |) AS s ON n_nationkey = s.n_nationkey
+           |WHEN MATCHED AND t.n_name = 'DUP' THEN $action""".stripMargin))
+      assert(e.getMessage.contains("MERGE cardinality violation"), e.getMessage)
+      assert(g.sql("SELECT n_nationkey, n_name FROM card6").collect().map(_.toString).sorted.toSeq == before)
+    }
+
+  // the same condition over unique target keys is an ordinary MERGE
+  test("a conditional MATCHED UPDATE over unique target keys acts on the selected rows only") {
+    val g = freshSql(); registerSources(g)
+    g.sql("""CREATE TABLE card7 AS SELECT n_nationkey, n_name, n_regionkey FROM nation
+            |WHERE n_nationkey < 3""".stripMargin)
+    val names = g.sql("SELECT n_nationkey, n_name FROM card7").collect()
+      .map(r => r.get(0).toString.toLong -> r.getString(1)).toMap
+    g.sql(s"""MERGE INTO card7 AS t USING (
+             |  SELECT n_nationkey, 'X' AS n_name FROM nation WHERE n_nationkey < 3
+             |) AS s ON n_nationkey = s.n_nationkey
+             |WHEN MATCHED AND t.n_name = '${names(1L)}' THEN UPDATE SET n_name = s.n_name""".stripMargin)
+    val after = g.sql("SELECT n_nationkey, n_name FROM card7").collect()
+      .map(r => r.get(0).toString.toLong -> r.getString(1)).toMap
+    assert(after == names + (1L -> "X"))
+  }
+
   /** `nation`'s 25 rows as (key, name, region), key order. */
   private def nationRows(g: GraftSql, table: String): Seq[(Long, String, Long)] =
     g.sql(s"SELECT n_nationkey, n_name, n_regionkey FROM $table").collect().toSeq

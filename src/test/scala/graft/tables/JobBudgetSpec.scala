@@ -52,14 +52,14 @@ class JobBudgetSpec extends SparkSpec {
   // File-system calls per operation, as `FsCalls.toString` (the suite's
   // core-site.xml routes file: paths through the counting file system).
   private val FsPins: Map[String, String] = Map(
-    "append" -> "create=5 mkdirs=6 rename=2 delete=3 list=4 getFileStatus=30 setPermission=0",
-    "upsert" -> "create=7 mkdirs=9 rename=4 delete=5 list=7 getFileStatus=48 setPermission=0",
-    "merge" -> "create=7 mkdirs=9 rename=4 delete=5 list=8 getFileStatus=51 setPermission=0",
-    "refresh" -> "create=7 mkdirs=9 rename=4 delete=5 list=24 getFileStatus=175 setPermission=0",
-    "sync" -> "create=7 mkdirs=9 rename=4 delete=5 list=21 getFileStatus=130 setPermission=0",
-    "sql DELETE" -> "create=7 mkdirs=8 rename=6 delete=3 list=11 getFileStatus=79 setPermission=0",
+    "append" -> "create=4 mkdirs=4 rename=0 delete=1 list=1 getFileStatus=21 setPermission=0",
+    "upsert" -> "create=5 mkdirs=5 rename=0 delete=1 list=1 getFileStatus=24 setPermission=0",
+    "merge" -> "create=5 mkdirs=5 rename=0 delete=1 list=2 getFileStatus=30 setPermission=0",
+    "refresh" -> "create=5 mkdirs=5 rename=0 delete=1 list=18 getFileStatus=155 setPermission=0",
+    "sync" -> "create=5 mkdirs=5 rename=0 delete=1 list=15 getFileStatus=110 setPermission=0",
+    "sql DELETE" -> "create=6 mkdirs=6 rename=0 delete=1 list=6 getFileStatus=54 setPermission=0",
     "sql MERGE SET * INSERT *" ->
-      "create=6 mkdirs=7 rename=4 delete=3 list=12 getFileStatus=107 setPermission=0")
+      "create=5 mkdirs=5 rename=0 delete=1 list=8 getFileStatus=90 setPermission=0")
 
   private def assertFsPin(name: String, c: Cost): Unit =
     assert(c.fs.toString == FsPins(name), s"$name file-system calls moved: ${c.fs}")
@@ -101,10 +101,10 @@ class JobBudgetSpec extends SparkSpec {
   }
 
   // Pins, measured on this fixture. A change that moves one must say why.
-  private val RefreshJobs = 13
-  private val RefreshTaskCeiling = 40
-  private val SyncJobs = 8
-  private val SyncTaskCeiling = 32
+  private val RefreshJobs = 6
+  private val RefreshTaskCeiling = 24
+  private val SyncJobs = 4
+  private val SyncTaskCeiling = 20
 
   test("refresh and sync stay within their pinned job and task budgets") {
     val f = new Fixture
@@ -130,8 +130,9 @@ class JobBudgetSpec extends SparkSpec {
     assert(GraftTable.load(spark, f.replicaLoc).meta.snapshots.size == snaps0 + 1)
   }
 
-  // Commit primitives on the same fixture: one data write each, plus the
-  // merges' delete-key write. Each writes one small frame, one task a job.
+  // Commit primitives on the same fixture: the append is one write job;
+  // each merge writes its data and delete-key files in one job after the
+  // shuffle that co-locates equal keys. One task a job.
   private val AppendJobs = 1
   private val AppendTaskCeiling = 1
   private val UpsertJobs = 2
@@ -261,6 +262,29 @@ class JobBudgetSpec extends SparkSpec {
     info(s"refresh: $refresh, sync: $sync")
     assert(refresh.compiles == 0, s"refresh recompiled: $refresh")
     assert(sync.compiles == 0, s"sync recompiled: $sync")
+  }
+
+  test("a warm refresh whose range holds a compaction compiles no generated code") {
+    val f = warmFixture()
+    // maintenance commits carry no rows: they add no changelog branch, so
+    // the range plans like a warm cycle's
+    f.base.compact()
+    f.cycle()
+    val (_, refresh) = cost(f.view.refresh())
+    info(s"refresh: $refresh")
+    assert(refresh.compiles == 0, s"refresh recompiled: $refresh")
+  }
+
+  test("a warmed target-size append compiles no generated code on its session clone") {
+    val t = GraftTable.createAs(spark, tmp(), orders(100))
+    t.setProperties(Map(TableFormat.TargetFileSize -> "16384"))
+    def batch(i: Int): DataFrame =
+      orders(60).withColumn("o_orderkey", col("o_orderkey") + 1000000L * i)
+    // each target-size write plans on a fresh clone of the session
+    t.append(batch(1))
+    val (_, append) = cost(t.append(batch(2)))
+    info(s"target-size append: $append")
+    assert(append.compiles == 0, s"target-size append recompiled: $append")
   }
 
   test("a sync over the same commit kinds at shifted ordinals compiles no generated code") {
