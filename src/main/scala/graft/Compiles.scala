@@ -19,11 +19,4 @@ final case class Compiles(count: Long, ms: Double) {
 object Compiles {
   def now(): Compiles = Compiles(CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
     CodeGenerator.compileTime / 1e6)
-
-  /** `body`'s result and the compiles it caused. */
-  def during[A](body: => A): (A, Compiles) = {
-    val c0 = now()
-    val r = body
-    (r, now() - c0)
-  }
 }

@@ -33,13 +33,6 @@ object FsCalls {
     Kinds.map(_ -> new AtomicLong).toMap
 
   def now(): FsCalls = FsCalls(counters.map { case (k, c) => k -> c.get })
-
-  /** `body`'s result and the file-system calls made while it ran. */
-  def during[A](body: => A): (A, FsCalls) = {
-    val c0 = now()
-    val r = body
-    (r, now() - c0)
-  }
 }
 
 /** The local file system, counting each call of the kinds in

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Tuned SparkSession factory for the graft engine.
   *
   * One set of settings for every session graft builds (tests, Verify,
-  * Bench, the probes), whatever its master — `local[n]` with n from
+  * Bench, CommitProbe), whatever its master — `local[n]` with n from
   * `SPARK_GRAFT_CPUS` or the box's core count, or a multi-executor
   * cluster: AQE owns runtime shuffle sizing (coalescing + skew
   * splitting, cached frames included), broadcast threshold covers the
@@ -13,8 +13,8 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Apply graft's tuning to an arbitrary builder (used by Verify/Bench
-    * which pick their own master/parallelism). `SPARK_GRAFT_CONF`
+  /** Apply graft's tuning to an arbitrary builder (used by [[local]] and
+    * by callers that pick their own master). `SPARK_GRAFT_CONF`
     * (semicolon-separated k=v pairs) overrides individual settings for
     * A/B profiling runs without a rebuild.
     */
@@ -142,19 +142,12 @@ object GraftSession {
       }
     }
 
-  /** A tuned `local[n]` session for the benchmark and probe mains, with n
-    * from `SPARK_GRAFT_CPUS` (default: this machine's core count).
+  /** A tuned `local[threads]` session: the tests, Verify, Bench and
+    * CommitProbe. `threads` defaults to `SPARK_GRAFT_CPUS`, else this
+    * machine's core count.
     */
-  def harness(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val s = tune(SparkSession.builder().master(s"local[$cpus]")).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  /** Standalone session (tests, ad-hoc mains). */
-  def local(threads: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  def local(threads: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())): SparkSession = {
     val s = tune(SparkSession.builder().master(s"local[$threads]").appName("graft"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

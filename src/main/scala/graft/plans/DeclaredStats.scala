@@ -148,17 +148,9 @@ object DeclaredStats {
         Seq(PushThrough, PushDownPredicates, ColumnPruning, CollapseProject)
   }
 
-  /** A/B profiling escape hatch (`SPARK_GRAFT_DECLARED_STATS=false`
-    * detaches stats serving entirely) — splits machine drift from
-    * estimation cost when chasing planning-overhead regressions.
-    */
-  private val enabled: Boolean =
-    sys.env.get("SPARK_GRAFT_DECLARED_STATS").forall(_ != "false")
-
   /** Wrap `df` so Catalyst plans it under the declared statistics. */
   def attach(df: DataFrame, sizeBytes: Long, rows: Option[Long],
       colStatsByName: Map[String, ColumnStat]): DataFrame = {
-    if (!enabled) return df
     install(df.sparkSession)
     val r = rows.map(BigInt(_))
     Bridge.ofRows(df.sparkSession,

@@ -1,13 +1,10 @@
 package graft.tables
 
-import graft.{Compiles, FsCalls, SparkSpec}
+import graft.{Bench, Cost, SparkSpec}
 import graft.sources.{GraftSql, Tables}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 /** Pinned Spark job, compile and file-system call budgets for the commit
   * primitives, the changelog consumers and copy-on-write DML.
@@ -19,35 +16,12 @@ import java.util.concurrent.atomic.AtomicInteger
   * generated code fails here however noisy the machine is.
   */
 class JobBudgetSpec extends SparkSpec {
-  import JobBudgetSpec.Cost
-
   private def tmp(): String = Files.createTempDirectory("graft_budget").toString + "/t"
 
   private def orders(n: Int): DataFrame =
     Tables.orders(spark, sf).orderBy(col("o_orderkey")).limit(n)
 
-  private val jobs = new AtomicInteger
-  private val tasks = new AtomicInteger
-  private lazy val listener = {
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = { tasks.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
-
-  /** Jobs and tasks `body` launches, every listener event delivered, the
-    * classes it compiles and the file-system calls it makes.
-    */
-  private def cost[A](body: => A): (A, Cost) = {
-    listener
-    Bridge.drainListenerBus(spark)
-    val (j0, t0) = (jobs.get, tasks.get)
-    val ((r, c), fs) = FsCalls.during(Compiles.during(body))
-    Bridge.drainListenerBus(spark)
-    (r, Cost(jobs.get - j0, tasks.get - t0, c.count, fs))
-  }
+  private def cost[A](body: => A): (A, Cost) = Cost.of(spark)(body)
 
   // File-system calls per operation, as `FsCalls.toString` (the suite's
   // core-site.xml routes file: paths through the counting file system).
@@ -240,6 +214,29 @@ class JobBudgetSpec extends SparkSpec {
     }
   }
 
+  // A table create and three hot table gates, each gate run as Bench
+  // times it (its frame built and its hash consumed): name -> (jobs, task
+  // ceiling), on the second of two runs.
+  private val GatePins: Map[String, (Int, Int)] = Map(
+    "createAs" -> (1, 1),
+    "t37_replicate" -> (16, 26),
+    "t43_cdc_schema_evolution" -> (19, 25),
+    "mv01_incremental_agg" -> (28, 45))
+
+  test("createAs and the t37, t43 and mv01 gates stay within their pinned job and task budgets") {
+    def second(c: => Cost): Cost = { c; c }
+    val create = second(cost(GraftTable.createAs(spark, tmp(), orders(400)))._2)
+    val gates = GatePins.keySet - "createAs"
+    val named = ("createAs" -> create) +:
+      gates.toSeq.sorted.map(g => g -> second(Bench.timeGate(spark, sf, g)._1.cost))
+    info(named.map { case (n, c) => s"$n: $c" }.mkString(", "))
+    named.foreach { case (name, c) =>
+      val (jobs, taskCeiling) = GatePins(name)
+      assert(c.jobs == jobs, s"$name job count moved: $c")
+      assert(c.tasks <= taskCeiling, s"$name ran $c")
+    }
+  }
+
   test("a sync over N source commits adds exactly one replica snapshot") {
     val f = new Fixture
     for (n <- Seq(1, 3, 6)) {
@@ -260,8 +257,8 @@ class JobBudgetSpec extends SparkSpec {
     val (_, refresh) = cost(f.view.refresh())
     val (_, sync) = cost(TableReplicator.sync(spark, f.replicaLoc))
     info(s"refresh: $refresh, sync: $sync")
-    assert(refresh.compiles == 0, s"refresh recompiled: $refresh")
-    assert(sync.compiles == 0, s"sync recompiled: $sync")
+    assert(refresh.compiles.count == 0, s"refresh recompiled: $refresh")
+    assert(sync.compiles.count == 0, s"sync recompiled: $sync")
   }
 
   test("a warm refresh whose range holds a compaction compiles no generated code") {
@@ -272,7 +269,7 @@ class JobBudgetSpec extends SparkSpec {
     f.cycle()
     val (_, refresh) = cost(f.view.refresh())
     info(s"refresh: $refresh")
-    assert(refresh.compiles == 0, s"refresh recompiled: $refresh")
+    assert(refresh.compiles.count == 0, s"refresh recompiled: $refresh")
   }
 
   test("a warmed target-size append compiles no generated code on its session clone") {
@@ -284,7 +281,7 @@ class JobBudgetSpec extends SparkSpec {
     t.append(batch(1))
     val (_, append) = cost(t.append(batch(2)))
     info(s"target-size append: $append")
-    assert(append.compiles == 0, s"target-size append recompiled: $append")
+    assert(append.compiles.count == 0, s"target-size append recompiled: $append")
   }
 
   test("a sync over the same commit kinds at shifted ordinals compiles no generated code") {
@@ -297,10 +294,6 @@ class JobBudgetSpec extends SparkSpec {
     val (applied, sync) = cost(TableReplicator.sync(spark, f.replicaLoc))
     info(s"sync: $sync")
     assert(applied == 5)
-    assert(sync.compiles == 0, s"sync recompiled: $sync")
+    assert(sync.compiles.count == 0, s"sync recompiled: $sync")
   }
-}
-
-object JobBudgetSpec {
-  private final case class Cost(jobs: Int, tasks: Int, compiles: Long, fs: FsCalls)
 }
